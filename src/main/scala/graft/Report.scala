@@ -365,7 +365,7 @@ object Report {
     * parity to a published report requires the report's own
     * format). Every line except the trailing generation timestamp
     * reproduces the committed file exactly; InsightsSpec pins that
-    * line-by-line against `/root/reference/reports/eda/
+    * line-by-line against the reference's `reports/eda/
     * eda_summary.md`. Formatting note: Python's `{:.1f}` rounds
     * half-even, Java's `%.1f` half-up — equal everywhere off a
     * .x5 tie, and the spec proves none of the four formatted values

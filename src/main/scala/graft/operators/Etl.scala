@@ -64,6 +64,21 @@ object Etl {
       .map { case (m, i) => s"WHEN '$m' THEN ${i + 1}" }
       .mkString(s"CASE $e ", " ", " END")
 
+  /** The running checkout's build directory, where every generated
+    * raw-book fixture lives: the `target` directory that holds the
+    * compiled classes, found from where this class was loaded. A run
+    * from another checkout writes and reads its own fixtures, and the
+    * oracle SQL below names that same directory. Falls back to
+    * `./target` when the classes do not sit under a `target` dir.
+    */
+  private[graft] val fixtureRoot: String =
+    Option(getClass.getProtectionDomain.getCodeSource)
+      .map(cs => Paths.get(cs.getLocation.toURI))
+      .flatMap(Iterator.iterate(_)(_.getParent).takeWhile(_ != null)
+        .find(d => Option(d.getFileName).exists(_.toString == "target")))
+      .getOrElse(Paths.get("target").toAbsolutePath)
+      .toString
+
   /** Where the raw book is materialized as a real CSV file — the
     * parse stage must cross an actual file boundary (reference
     * etl.py:20-33 reads workbooks off disk). Lives under the build
@@ -71,7 +86,7 @@ object Etl {
     * clobber each other, and the oracle picks its SF's file by the
     * src_n tag each row carries.
     */
-  private val rawRoot = "/root/repo/target/etl_raw"
+  private val rawRoot = s"$fixtureRoot/etl_raw"
 
   /** The raw "workbook": (yr, flow, mes, val) string rows — 12
     * month-name rows plus one 'Total' row per year/flow.
@@ -292,7 +307,7 @@ object Etl {
   // the parse in SQL — any xlsx round-trip divergence lands in the
   // hash, the same closed loop etl_parse_xlsx uses.
 
-  private val prodRoot = "/root/repo/target/etl_raw_prod"
+  private[graft] val prodRoot = s"$fixtureRoot/etl_raw_prod"
 
   /** Monthly integer-dollar usd per (yr, flow, category, mon) — the
     * deterministic data the fixture grids render. Categories are
@@ -565,7 +580,7 @@ object Etl {
     *  - the QA record's sum_months is a LEFT-TO-RIGHT fold in column
     *    order with NULLs as +0.0, matching pandas' masked sequential
     *    sum bit for bit on the committed books (etl.py:57; verified
-    *    byte-exact against /root/reference/trade.parquet by
+    *    byte-exact against the reference's trade.parquet by
     *    ReferenceParitySpec — float addition is order-sensitive, so
     *    the fold order is part of the parity contract);
     *  - flow by source book: F8 → import, G6 → export (etl.py:15-18).

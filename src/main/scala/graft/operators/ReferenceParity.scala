@@ -6,11 +6,32 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** The one locator for the read-only sunat_rree_demo checkout whose
+  * raw books and committed outputs the reference-bound tier reads
+  * (PAPER.md §1). Its root is `GRAFT_REFERENCE_DIR`, or the
+  * documented default when that is unset.
+  */
+object Reference {
+  val root: String = sys.env.getOrElse("GRAFT_REFERENCE_DIR", "/root/reference")
+
+  /** `root/rel`, checked to exist: a missing input fails here with
+    * one line that names it, never deeper inside a Spark scan.
+    */
+  def path(rel: String): String = {
+    val p = s"$root/$rel"
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+      throw new java.io.FileNotFoundException(
+        s"$p is missing: it belongs to the sunat_rree_demo reference " +
+          "checkout; set GRAFT_REFERENCE_DIR to that checkout's root")
+    p
+  }
+}
+
 /** Reconciliation against the reference's OWN published outputs — the
-  * golden files the pipeline shipped with:
-  * `/root/reference/trade_prod.parquet` (etl_products.py's long table
+  * golden files the pipeline shipped with, found through [[Reference]]:
+  * `trade_prod.parquet` (etl_products.py's long table
   * over the real `data/cdro_F1.xlsx`/`cdro_G1.xlsx` books),
-  * `/root/reference/trade.parquet` (etl.py's totals table over
+  * `trade.parquet` (etl.py's totals table over
   * `cdro_F8.xlsx`+`cdro_G6.xlsx`), and the KPI tables metrics.py /
   * metrics_products.py computed from them. Each entry here runs a
   * graft stage over the reference's REAL inputs (or, for the metric
@@ -52,7 +73,10 @@ import org.apache.spark.sql.functions._
   */
 object ReferenceParity {
 
-  private val refRoot = "/root/reference"
+  /** Unchecked: only the DuckDB oracle SQL embeds it, and those strings
+    * must build (SparkEntry lists them) whether or not the checkout is
+    * present. Every Spark-side read goes through [[Reference.path]]. */
+  private val refRoot = Reference.root
 
   /** month_num as int64 (the committed parquets' dtype), via the one
     * month-name → number mapping the etl parse already defines. */
@@ -66,7 +90,7 @@ object ReferenceParity {
   private[graft] def refCells(spark: SparkSession): DataFrame =
     refCellsCache.getOrBuild(spark, refRoot) {
       graft.MeasuredCkpt(
-        graft.sources.Xlsx.readAllCells(spark, s"$refRoot/data"))
+        graft.sources.Xlsx.readAllCells(spark, Reference.path("data")))
     }
 
   // ---- ref_trade_prod: real F1/G1 parse vs the committed long table ----
@@ -158,7 +182,7 @@ object ReferenceParity {
   }
 
   private def refKpiMonthly(spark: SparkSession, dir: String): DataFrame =
-    kpiMonthlyFrom(Tables.cachedRead(spark, s"$refRoot/trade.parquet"))
+    kpiMonthlyFrom(Tables.cachedRead(spark, Reference.path("trade.parquet")))
 
   private val refKpiMonthlySql =
     s"""SELECT year, month, month_num, export, import, balance,
@@ -222,7 +246,8 @@ object ReferenceParity {
   }
 
   private def refKpiProdMonthly(spark: SparkSession, dir: String): DataFrame =
-    kpiProdMonthlyFrom(Tables.cachedRead(spark, s"$refRoot/trade_prod.parquet"))
+    kpiProdMonthlyFrom(
+      Tables.cachedRead(spark, Reference.path("trade_prod.parquet")))
 
   private val refKpiProdMonthlySql =
     s"""SELECT year, month, month_num, category, exp, imp, balance, cov_ratio,

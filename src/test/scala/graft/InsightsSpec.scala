@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Reference
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Mirrors the reference's tests/test_insights.py and
@@ -187,7 +188,7 @@ class InsightsSpec extends AnyFunSuite {
     assert(files.map(_._1) == wantNames, s"filenames: ${files.map(_._1)}")
     // every name the committed summary promises is covered
     val golden = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      "/root/reference/reports/eda/eda_summary.md"))
+      Reference.path("reports/eda/eda_summary.md")))
     wantNames.foreach(n => assert(golden.contains(n),
       s"$n not in the committed Archivos Generados list — inventory drifted"))
     files.foreach { case (name, html) =>
@@ -218,14 +219,14 @@ class InsightsSpec extends AnyFunSuite {
     // first, then prove EVERY line of the published report
     // reproduces from the committed data through graft's own
     // pipeline (ref_kpi_monthly → ref_eda_stats → the template).
-    val km = spark.read.parquet("/root/reference/kpi_monthly.parquet")
+    val km = spark.read.parquet(Reference.path("kpi_monthly.parquet"))
     assert(km.count() == 239, "committed kpi_monthly row count moved")
     val win = km.filter("balance IS NOT NULL")
     assert(win.count() == 156, "balance-non-null window is the 156-month claim")
     assert(win.agg(org.apache.spark.sql.functions.max("year")).head.getLong(0) == 2017)
 
     val golden = java.nio.file.Files.readString(
-      java.nio.file.Paths.get("/root/reference/reports/eda/eda_summary.md"))
+      java.nio.file.Paths.get(Reference.path("reports/eda/eda_summary.md")))
     val rendered = graft.Report.renderEdaSummaryGolden(spark)
     val gl = golden.linesIterator.toSeq
     val rl = rendered.linesIterator.toSeq

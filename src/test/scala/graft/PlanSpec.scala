@@ -147,21 +147,37 @@ class PlanSpec extends AnyFunSuite {
     val audited = Set("graph_pagerank", "graph_triangles", "ref_eda_stats",
       "ref_kpi_monthly", "ref_kpi_prod_monthly")
     val offenders = scala.collection.mutable.SortedMap.empty[String, Seq[String]]
+    // each plan is built on its own: a query whose input is missing is
+    // recorded with the first line of its cause and reported at the
+    // end, never allowed to leave the queries after it unchecked
+    val buildFailures = scala.collection.mutable.SortedMap.empty[String, String]
+    var checked = 0
     for ((name, fn) <- SparkEntry.queries) {
-      val p = fn(spark, sf).queryExecution.executedPlan
-      val hits = p.collect {
-        case node if node.requiredChildDistribution.zip(node.children).exists {
-          case (_: ClusteredDistribution, c) => c.outputPartitioning == SinglePartition
-          case _ => false
-        } => node.nodeName
+      scala.util.Try(fn(spark, sf).queryExecution.executedPlan) match {
+        case scala.util.Failure(e) =>
+          buildFailures(name) = s"${e.getClass.getSimpleName}: " +
+            Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+        case scala.util.Success(p) =>
+          checked += 1
+          val hits = p.collect {
+            case node if node.requiredChildDistribution.zip(node.children).exists {
+              case (_: ClusteredDistribution, c) => c.outputPartitioning == SinglePartition
+              case _ => false
+            } => node.nodeName
+          }
+          if (hits.nonEmpty) offenders(name) = hits
       }
-      if (hits.nonEmpty) offenders(name) = hits
     }
-    info(s"SinglePartition-under-clustering inventory: ${offenders.keys.mkString(", ")}")
+    info(s"checked $checked plans; SinglePartition-under-clustering inventory: " +
+      offenders.keys.mkString(", "))
     val unaudited = offenders.view.filterKeys(!audited(_)).toMap
+    val unbuilt = s"plans that did not build, so went unchecked " +
+      s"(${buildFailures.size}): " +
+      buildFailures.map { case (q, why) => s"$q: $why" }.mkString("; ")
     assert(unaudited.isEmpty,
       s"unaudited SinglePartition-under-clustering plans: $unaudited — " +
-        "audit the frame's size bound before adding it to the allowlist")
+        s"audit the frame's size bound before adding it to the allowlist; $unbuilt")
+    if (buildFailures.nonEmpty) fail(unbuilt)
   }
 
   test("no forced broadcast of SF-proportional customer/part frames") {

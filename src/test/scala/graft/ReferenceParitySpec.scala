@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reconciliation against the reference pipeline's OWN published
-  * parquets — the golden files in /root/reference. Every comparison
+  * parquets — the golden files under the reference root
+  * ([[graft.operators.Reference]]). Every comparison
   * here is BYTE-EXACT (null-safe, bit-for-bit doubles): the
   * ref_* queries' driver oracle is `read_parquet` over these same
   * files, so any tolerance would only hide a mismatch the driver
@@ -14,8 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ReferenceParitySpec extends AnyFunSuite {
   import TestSpark._
-
-  private val refRoot = "/root/reference"
+  import graft.operators.Reference
 
   /** Exact frame equality: same schema names, same row count, every
     * value identical (doubles compared bit-for-bit, null == null).
@@ -56,7 +56,7 @@ class ReferenceParitySpec extends AnyFunSuite {
     // duplicate (year, flow, category, month) key, both sides must
     // still use the same TOTAL order or the positional row-zip
     // flakes (r12 ADVICE)
-    val ref = spark.read.parquet(s"$refRoot/trade_prod.parquet")
+    val ref = spark.read.parquet(Reference.path("trade_prod.parquet"))
       .orderBy("year", "flow", "category", "month", "usd")
       .selectExpr("CAST(year AS BIGINT) AS year", "month", "flow", "category", "usd")
     assertExact(mine, ref, "trade_prod")
@@ -67,7 +67,7 @@ class ReferenceParitySpec extends AnyFunSuite {
     // also pins the left-to-right column-order fold in
     // parseTotalsBookCells as the correct pandas-equivalent order
     val mine = SparkEntry.queries("ref_trade_export")(spark, sf)
-    val ref = spark.read.parquet(s"$refRoot/trade.parquet")
+    val ref = spark.read.parquet(Reference.path("trade.parquet"))
       .where("flow = 'export'")
       .orderBy("year", "month")
       .selectExpr("CAST(year AS BIGINT) AS year", "month", "flow", "usd", "sum_months")
@@ -76,7 +76,7 @@ class ReferenceParitySpec extends AnyFunSuite {
 
   test("ref_kpi_monthly: metrics.py re-expressed equals the committed kpi_monthly.parquet, byte-exact") {
     val mine = SparkEntry.queries("ref_kpi_monthly")(spark, sf)
-    val ref = spark.read.parquet(s"$refRoot/kpi_monthly.parquet")
+    val ref = spark.read.parquet(Reference.path("kpi_monthly.parquet"))
       .orderBy("year", "month_num")
       .selectExpr("CAST(year AS BIGINT) AS year", "month",
         "CAST(month_num AS BIGINT) AS month_num", "export", "import", "balance",
@@ -88,7 +88,7 @@ class ReferenceParitySpec extends AnyFunSuite {
 
   test("ref_kpi_prod_monthly: metrics_products.py re-expressed equals kpi_prod_monthly.parquet, byte-exact") {
     val mine = SparkEntry.queries("ref_kpi_prod_monthly")(spark, sf)
-    val ref = spark.read.parquet(s"$refRoot/kpi_prod_monthly.parquet")
+    val ref = spark.read.parquet(Reference.path("kpi_prod_monthly.parquet"))
       .orderBy("category", "year", "month_num")
       .selectExpr("CAST(year AS BIGINT) AS year", "month",
         "CAST(month_num AS BIGINT) AS month_num", "category", "exp", "imp",
@@ -100,10 +100,23 @@ class ReferenceParitySpec extends AnyFunSuite {
   test("NEGATIVE CONTROL: the byte-exact comparator detects a single flipped value") {
     // a comparator bug that made assertExact vacuously pass would
     // silently void every parity claim above — prove one ulp-level
-    // mutation in one cell fails the compare
+    // mutation in one cell fails the compare. The frame is built here
+    // with the golden kpi_monthly's column types (year/month_num
+    // bigint, export in USD at billions scale, a double column that
+    // is null on part of its range, as balance is in the committed
+    // table): the check is about the comparator, not about the
+    // reference's values, so it needs no reference checkout.
     import org.apache.spark.sql.functions._
-    val ref = spark.read.parquet(s"$refRoot/kpi_monthly.parquet")
+    import spark.implicits._
+    val rows = for (y <- 2008L to 2012L; m <- 1L to 12L) yield {
+      val export = 2.5e9 + (y - 2008L) * 3.1e8 + m * 4.7e7 + y * m * 13.37
+      (y, m, export, if (y <= 2010L) Some(export * 0.12 - 1.9e8) else None)
+    }
+    val ref = rows.toDF("year", "month_num", "export", "balance")
       .orderBy("year", "month_num")
+    // the unmutated frame must compare equal, nulls included, so the
+    // intercepts below can only be answered by the mutated cell
+    assertExact(ref, ref, "negative control baseline")
     val mutated = ref.withColumn("export",
       when(col("year") === 2010 && col("month_num") === 6,
         col("export") + 1e-6).otherwise(col("export")))
@@ -162,7 +175,7 @@ class ReferenceParitySpec extends AnyFunSuite {
       graft.operators.ReferenceParity.refCells(spark)
         .filter(col("book").contains("cdro_F1") || col("book").contains("cdro_G1")))
     val mine = graft.operators.ReferenceParity.kpiProdMonthlyFrom(parsed)
-    val ref = spark.read.parquet(s"$refRoot/kpi_prod_monthly.parquet")
+    val ref = spark.read.parquet(Reference.path("kpi_prod_monthly.parquet"))
       .orderBy("category", "year", "month_num")
       .selectExpr("CAST(year AS BIGINT) AS year", "month",
         "CAST(month_num AS BIGINT) AS month_num", "category", "exp", "imp",
@@ -188,7 +201,7 @@ class ReferenceParitySpec extends AnyFunSuite {
         parsed.select("year", "month", "flow", "usd"))
       .select("year", "month", "month_num", "export",
         "export_mom", "export_yoy", "export_ma3", "idx2005_export")
-    val ref = spark.read.parquet(s"$refRoot/kpi_monthly.parquet")
+    val ref = spark.read.parquet(Reference.path("kpi_monthly.parquet"))
       .orderBy("year", "month_num")
       .selectExpr("CAST(year AS BIGINT) AS year", "month",
         "CAST(month_num AS BIGINT) AS month_num", "export",

@@ -299,7 +299,7 @@ class SourcesSpec extends AnyFunSuite {
     val frag = s"$sf#cat=large%20brushed%20brass"
     SparkEntry.queries("etl_parse_xlsx_prod")(spark, frag).collect()
     import scala.jdk.CollectionConverters._
-    val v2 = java.nio.file.Paths.get("/root/repo/target/etl_raw_prod/v2")
+    val v2 = java.nio.file.Paths.get(s"${graft.operators.Etl.prodRoot}/v2")
     val fragDirs = Files.list(v2).iterator().asScala
       .filter(_.getFileName.toString.contains("cat")).toList
     assert(fragDirs.nonEmpty, "params fixture dir not found")

@@ -2,6 +2,7 @@ package graft
 
 import java.io.ByteArrayOutputStream
 import java.nio.file.Files
+import graft.operators.Reference
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The OOXML (.xlsx) boundary: writer/parser round-trip and the
@@ -101,7 +102,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("the reference's REAL Excel-written product books parse end to end") {
-    // /root/reference/data/cdro_F1.xlsx + cdro_G1.xlsx are the actual
+    // the reference's data/cdro_F1.xlsx + cdro_G1.xlsx are the actual
     // inputs etl_products.py consumes: Excel-written OOXML with shared
     // strings, r="B2" sparse cell addressing, styled empty cells and
     // numeric <v> values — none of which the fixture books exercise.
@@ -113,8 +114,9 @@ class XlsxSpec extends AnyFunSuite {
     // layer — layout facts asserted without consulting the golden
     // file, so a regression that corrupted both sides of a file
     // compare would still fail here.
+    Seq("F1", "G1").foreach(b => Reference.path(s"data/cdro_$b.xlsx"))
     val cells = graft.sources.Xlsx.readAllCells(
-      spark, "/root/reference/data/cdro_{F1,G1}.xlsx")
+      spark, s"${Reference.root}/data/cdro_{F1,G1}.xlsx")
     val rows = graft.operators.Etl.parseBookCells(cells).collect()
     assert(rows.length > 500, s"only ${rows.length} rows from the real books")
     val years = rows.map(_.getInt(0)).distinct
@@ -141,7 +143,7 @@ class XlsxSpec extends AnyFunSuite {
     // decoder must surface its year sheets, month headers and
     // shared-string country names without any book-specific handling
     val bytes = Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/data/cdro_G6.xlsx"))
+      java.nio.file.Paths.get(Reference.path("data/cdro_G6.xlsx")))
     val sheets = graft.sources.Xlsx.parseWorkbook(bytes)
     val yearSheets = sheets.filter(_._1.matches("[0-9]{4}"))
     assert(yearSheets.size >= 20, s"expected ~21 year sheets, got ${yearSheets.size}")

@@ -5,6 +5,8 @@ set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 MAIN=${3:-graft.Verify}
+# this checkout's own classes: the Etl fixtures land in its target dir
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -19,5 +21,5 @@ shift $(( $# > 3 ? 3 : $# ))
 # 32-thread shuffles) need ~48g or executor tasks OOM mid-shuffle
 exec java $ADD_OPENS -Xmx${GRAFT_XMX:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$SF" "$OUT" "$@"
