@@ -496,15 +496,22 @@ object Report {
     // the drop-in replacements for the reference's committed
     // reports/eda/ surface: the summary in its exact format and the
     // six HTML figures under their exact filenames, from the real
-    // data (self-contained SVG pages instead of plotly bundles)
-    Files.createDirectories(Paths.get(s"$outDir/eda"))
-    Files.writeString(Paths.get(s"$outDir/eda/eda_summary.md"),
-      renderEdaSummaryGolden(spark))
-    renderReferenceHtml(spark).foreach { case (name, html) =>
-      Files.writeString(Paths.get(s"$outDir/eda/$name"), html)
-    }
-    println(s"report written: $outDir/eda_summary.md (+2 SVG figures, " +
-      s"+$outDir/eda: eda_summary.md and 6 HTML figures)")
+    // data (self-contained SVG pages instead of plotly bundles) —
+    // rendered only where the reference checkout is present
+    val refRoot = graft.operators.Reference.root
+    if (Files.isDirectory(Paths.get(refRoot))) {
+      Files.createDirectories(Paths.get(s"$outDir/eda"))
+      Files.writeString(Paths.get(s"$outDir/eda/eda_summary.md"),
+        renderEdaSummaryGolden(spark))
+      renderReferenceHtml(spark).foreach { case (name, html) =>
+        Files.writeString(Paths.get(s"$outDir/eda/$name"), html)
+      }
+      println(s"report written: $outDir/eda_summary.md (+2 SVG figures, " +
+        s"+$outDir/eda: eda_summary.md and 6 HTML figures)")
+    } else
+      println(s"report written: $outDir/eda_summary.md (+2 SVG figures); " +
+        s"reference checkout $refRoot not found (GRAFT_REFERENCE_DIR), " +
+        "so its golden summary and 6 HTML figures were not rendered")
     spark.stop()
   }
 }

@@ -453,8 +453,8 @@ object Tables {
     * size-proportional files; the cap bounds the LOCAL tmp layout
     * only — past ~512 MB per table, local[N] is not the design point
     * and a real deployment's ingest layout replaces this relayout
-    * entirely. The width is part of the converted-copy cache key, so
-    * the 4-thread test JVM and the 32-thread bench JVM keep separate
+    * entirely. The width is a segment of the converted copy's root, so
+    * a 4-thread test JVM and a 32-thread bench JVM keep separate
     * (correct-width) copies instead of fighting over one.
     */
   /** Ceiling-divide by the 2 MB dial constant WITHOUT the
@@ -472,25 +472,9 @@ object Tables {
     math.min(math.max(ceilDiv2MB(bytes), floor), 256L).toInt
   }
 
-  private val splitLock = new Object
-  /** Fixture keys whose sibling sweep already ran this JVM — the
-    * reuse-path prune in [[publishFixture]] is idempotent but not
-    * free (list + file lock), so bound it to once per key/session.
-    */
-  private val sweptFixtures =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** Serializes every publish step in this JVM; see [[publishFixture]]. */
+  private val fixtureLock = new Object
 
-  /** One-time ingest relayout: the single-file fact parquet rewritten
-    * as a [[splitFiles]]-file parquet directory under the system tmp
-    * dir, keyed by (source path, file length) so a regenerated source
-    * can never serve a stale copy. Raw bytes only — no casts, no
-    * column changes (events' nano-ts long arrives as-is and is
-    * truncated in the plan, same as before) — so every downstream
-    * query is byte-for-byte the same data with a splittable scan.
-    * Concurrent first callers (test JVM + bench JVM) each write a
-    * private tmp dir; the atomic rename publishes one winner and the
-    * loser's copy is deleted.
-    */
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     if (Files.isDirectory(p)) {
@@ -502,7 +486,7 @@ object Tables {
 
   /** Atomically publish `tmp` as `out`, yielding to a concurrent
     * publisher from ANOTHER JVM (the in-process race is already held
-    * off by splitLock). Losing the cross-JVM race surfaces as
+    * off by fixtureLock). Losing the cross-JVM race surfaces as
     * FileAlreadyExistsException on some platforms but as
     * DirectoryNotEmptyException (ENOTEMPTY) when Linux rename(2)
     * rejects moving onto an existing non-empty directory — both are
@@ -519,36 +503,26 @@ object Tables {
     }
   }
 
+  /** One-time ingest relayout: the single-file fact parquet rewritten
+    * as a [[splitFilesFor]]-file parquet directory, published as a
+    * [[publishFixture]] under `java.io.tmpdir/graft-split/w<width>`,
+    * so a regenerated source can never serve a stale copy. Raw bytes
+    * only — no casts, no column changes (events' nano-ts long arrives
+    * as-is and is truncated in the plan, same as before) — so every
+    * downstream query is byte-for-byte the same data with a
+    * splittable scan. The measured width is a root segment: a dial
+    * change can never serve a stale-width copy, and the older-version
+    * prune never crosses widths.
+    */
   private[graft] def splitLayout(spark: SparkSession, dir: String, name: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(s"$dir/$name.parquet")
-    val nFiles = splitFilesFor(Files.size(src),
+    val src = s"$dir/$name.parquet"
+    val nFiles = splitFilesFor(java.nio.file.Files.size(java.nio.file.Paths.get(src)),
       spark.sparkContext.defaultParallelism)
-    // "t" prefix: the sanitized path starts with '_' (from the root
-    // slash), and Spark's file listing treats leading-underscore names
-    // as hidden — a converted dir named "_root_..." can be silently
-    // ignored by a scan. Size AND mtime in the key: a regenerated
-    // source of identical length must still invalidate the copy. The
-    // measured width is in the key too, so a dial change can never
-    // serve a stale-width copy.
-    val key = "t" + (dir + "/" + name).replaceAll("[^A-Za-z0-9._-]", "_") +
-      "_" + Files.size(src) +
-      "_" + Files.getLastModifiedTime(src).toMillis +
-      "_w" + nFiles
-    val out = Paths.get(System.getProperty("java.io.tmpdir"), "graft-split", key)
-    if (!Files.exists(out)) {
-      Files.createDirectories(out.getParent)
-      val tmp = Paths.get(out.getParent.toString,
-        s".tmp_${key}_${java.util.UUID.randomUUID()}")
-      spark.read.parquet(src.toString)
-        .repartition(nFiles)
-        .write.mode("overwrite").parquet(tmp.toString)
-      splitLock.synchronized {
-        if (Files.exists(out)) deleteRecursively(tmp) // lost the race
-        else publishOrYield(tmp, out)
-      }
-    }
-    cachedRead(spark, out.toString)
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft-split/w$nFiles"
+    cachedRead(spark, publishFixture(root, dir, s"$name.parquet") { tmp =>
+      spark.read.parquet(src).repartition(nFiles)
+        .write.mode("overwrite").parquet(tmp)
+    })
   }
 
   /** Resolved-relation cache: `spark.read.parquet` re-lists the
@@ -566,19 +540,20 @@ object Tables {
   private[graft] def cachedRead(spark: SparkSession, p: String): DataFrame =
     frameCache.getOrBuild((spark, p))(spark.read.parquet(p))
 
-  /** Publish-or-reuse protocol for fixture directories derived from
-    * one source parquet file (the JSONL corpus copy, the sharded
-    * export layout, …): same hardening as [[splitLayout]] — keyed by
-    * (source path, size, mtime) so a regenerated same-count source
-    * can never serve a stale fixture, and concurrent first writers
-    * (test JVM + bench JVM) each write a private tmp dir, one winner
-    * publishes via atomic rename, losers delete their copy instead
-    * of throwing FileAlreadyExistsException. `write` receives the
-    * private tmp path; the returned path is the published directory.
+  /** The publish-or-reuse protocol for every on-disk artifact derived
+    * from one source file: the relayout copies ([[splitLayout]]), the
+    * Etl raw and product books, the corpus JSONL and shard fixtures.
+    * Keyed by (source path, size, mtime) so a regenerated same-count
+    * source can never serve a stale fixture, and concurrent first
+    * writers (test JVM + bench JVM) each write a private tmp dir, one
+    * winner publishes via atomic rename, losers delete their copy
+    * instead of throwing FileAlreadyExistsException. `write` receives
+    * the private tmp path; the returned path is the published
+    * directory.
     */
   private[graft] def publishFixture(root: String, rawDir: String, srcFile: String)(
       write: String => Unit): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val dir = TradeParams.parseDir(rawDir)._1 // fragment stripped for the FILE lookup only
     val src = Paths.get(s"$dir/$srcFile")
     // The key carries the FULL rawDir — params fragment included —
@@ -590,23 +565,23 @@ object Tables {
     // (everything before the size/mtime suffix) identifies "this
     // source, this filter view"; the suffix identifies its version.
     //
-    // The prefix must be COLLISION-PROOF under sibling matching
-    // (startsWith(prefix + "_") below): sanitization collapses '#',
-    // '=', '%', ' ' and '_' all to '_', so one fixture's sanitized
-    // name could extend another's with "_..." (srcFile
-    // 'orders.parquet' vs 'orders.parquet_v2', rawDir 'a#b' vs
-    // physical dir 'a_b') and be pruned/stale-checked as a version
-    // sibling of the wrong fixture (r12 ADVICE). Two guards: '@' —
-    // a character the sanitizer can NEVER emit — terminates the
-    // sanitized section, so the first '@' in any key is an
-    // unambiguous boundary and prefix capture requires the sanitized
+    // "t" leads the key: the sanitized path starts with '_' (from the
+    // root slash), and Spark's file listing treats leading-underscore
+    // names as hidden. The prefix must be COLLISION-PROOF under
+    // sibling matching (startsWith(prefix + "_") below): sanitization
+    // collapses '#', '=', '%', ' ' and '_' all to '_', so one
+    // fixture's sanitized name could extend another's with "_..."
+    // (srcFile 'orders.parquet' vs 'orders.parquet_v2', rawDir 'a#b'
+    // vs physical dir 'a_b') and be pruned/stale-checked as a version
+    // sibling of the wrong fixture (r12 ADVICE). Two guards: '@' — a
+    // character the sanitizer can NEVER emit — terminates the
+    // sanitized section, so prefix capture requires the sanitized
     // sections to be IDENTICAL; then a fixed-width hash of the raw
     // (rawDir, srcFile) pair disambiguates raws that sanitize
     // identically. ('@' is filename-safe and carries no meaning to
     // Spark's partition discovery, unlike '='.)
     val raw = rawDir + "/" + srcFile
-    val legacyPrefix = "t" + raw.replaceAll("[^A-Za-z0-9._-]", "_")
-    val prefix = legacyPrefix +
+    val prefix = "t" + raw.replaceAll("[^A-Za-z0-9._-]", "_") +
       "@" + f"${scala.util.hashing.MurmurHash3.stringHash(raw)}%08x"
     val myMtime = Files.getLastModifiedTime(src).toMillis
     val key = prefix + "_" + Files.size(src) + "_" + myMtime
@@ -616,49 +591,27 @@ object Tables {
     // version stamp so pruning is ORDERED, not mutual
     def siblingMtime(name: String): Long =
       name.split('_').lastOption.flatMap(_.toLongOption).getOrElse(Long.MaxValue)
-    // Version siblings of this logical fixture: the collision-proof
-    // '@'-format, plus the pre-hash LEGACY format (no '@' anywhere —
-    // published before the key change). The legacy match must stay
-    // or old-format dirs linger forever and an oracle that GLOBS the
-    // fixture root reads both layouts' rows (observed as an exact
-    // src_n-fold row duplication when the format changed).
-    // The legacy capture must be EXACT: a legacy dir of a different
-    // logical source whose sanitized name merely extends this
-    // legacyPrefix ('orders.parquet' vs 'orders.parquet_v2') would
-    // otherwise be swept/stale-tripped as a version sibling of the
-    // wrong fixture (r13 ADVICE), so the remainder after the prefix
-    // must parse as exactly '<size>_<mtime>' — two numeric fields,
-    // nothing else.
-    def isLegacyStamp(rest: String): Boolean = rest.split('_') match {
-      case Array(size, mtime) =>
-        size.toLongOption.isDefined && mtime.toLongOption.isDefined
-      case _ => false
-    }
-    def isSibling(name: String): Boolean =
-      name != key && !name.startsWith(".") &&
-        (name.startsWith(prefix + "_") ||
-          (name.startsWith(legacyPrefix + "_") && !name.contains('@') &&
-            isLegacyStamp(name.stripPrefix(legacyPrefix + "_"))))
     def listSibs(): List[java.nio.file.Path] = {
       import scala.jdk.CollectionConverters._
       val kids = Files.list(out.getParent)
-      try kids.iterator().asScala
-        .filter(p => isSibling(p.getFileName.toString)).toList
+      try kids.iterator().asScala.filter { p =>
+        val name = p.getFileName.toString
+        name != key && name.startsWith(prefix + "_")
+      }.toList
       finally kids.close()
     }
     // Cross-JVM writers are supported (publishOrYield), so every
     // fresher-sibling check → publish → prune sequence must be
-    // atomic ACROSS processes, not only under splitLock: two JVMs
+    // atomic ACROSS processes, not only under fixtureLock: two JVMs
     // interleaving list/publish could otherwise leave a stale-key
     // dir and a fresh-key dir coexisting (the oracle-glob
     // duplication the prune closes) or publish a stale snapshot
     // after a fresh one without tripping the fail-loud path (r12
-    // ADVICE). splitLock stays OUTSIDE the file lock: OS file locks
+    // ADVICE). fixtureLock stays OUTSIDE the file lock: OS file locks
     // are held per-process, and a second in-process thread calling
     // lock() while the first holds it throws
     // OverlappingFileLockException instead of queueing.
-    def withLocks[T](body: => T): T = splitLock.synchronized {
-      Files.createDirectories(out.getParent)
+    def withLocks[T](body: => T): T = fixtureLock.synchronized {
       val lockCh = java.nio.channels.FileChannel.open(
         out.getParent.resolve(".graft-fixture.lock"),
         java.nio.file.StandardOpenOption.CREATE,
@@ -695,34 +648,13 @@ object Tables {
           // until someone cleans by hand (r11 ADVICE). Only siblings
           // sharing this key's logical prefix AND an older-or-equal
           // version stamp are touched (the newer-stamp case failed
-          // loudly above; an EQUAL stamp can only be the legacy spelling
-          // of this same version), so other SFs / other params views /
+          // loudly above), so other sources / other params views /
           // other callers' fixtures — and any fresher publish — are
           // never at risk. A reader mid-scan of a pruned dir can only
           // exist if its source was already regenerated underneath
           // it — its world was stale either way.
           sibs.foreach(deleteRecursively(_))
         }
-      }
-    } else if (sweptFixtures.putIfAbsent(out.toString,
-        java.lang.Boolean.TRUE) == null) {
-      // `out` already exists, so the publish-path prune above never
-      // runs — but superseded or legacy-format siblings may still
-      // linger from sessions that predate the current key format.
-      // Sweep them once per JVM (metadata-only, same locks) so an
-      // existing environment heals without waiting for a source
-      // regeneration. Transition caveat (r13 review): an equal-stamp
-      // LEGACY dir is still valid input for a concurrently running
-      // PRE-upgrade JVM, and this sweep would pull it out from under
-      // that reader — accepted because the old key format and old
-      // builds cannot coexist with this code in practice (one repo,
-      // one build per round; the sweep exists precisely to retire
-      // the old format), and a torn reader fails loudly, never
-      // silently serves wrong rows.
-      withLocks {
-        listSibs()
-          .filter(p => siblingMtime(p.getFileName.toString) <= myMtime)
-          .foreach(deleteRecursively(_))
       }
     }
     out.toString

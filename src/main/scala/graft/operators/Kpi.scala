@@ -589,7 +589,10 @@ object Kpi {
         count(lit(1)).as("n_years"))
       .select($"mon",
         ($"sx" / $"n_years").as("mean_export_m"),
-        sqrt(greatest(($"sx2" - $"sx" * $"sx" / $"n_years") / ($"n_years" - 1),
+        // a one-year month has no sample std: the variance is NULL
+        // (DuckDB's x/0) and greatest() maps it to 0.0 on both engines
+        sqrt(greatest(when($"n_years" > 1,
+            ($"sx2" - $"sx" * $"sx" / $"n_years") / ($"n_years" - 1)),
             lit(0.0))).as("std_export_m"),
         $"n_years")
       .resultOrder($"mon")

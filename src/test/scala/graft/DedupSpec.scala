@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Dedup/similarity semantics on the planted near-duplicates. */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
@@ -41,7 +41,7 @@ class DedupSpec extends AnyFunSuite {
     // oracle's UNNEST over a NULL range) never produced — the
     // denominator side must drop null n_chunks
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nulltext").toString
+    val dir = tempDir("graft-nulltext").toString
     Seq((0L, "a b c"), (1L, null: String), (2L, "a b c"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

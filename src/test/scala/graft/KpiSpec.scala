@@ -23,6 +23,22 @@ class KpiSpec extends AnyFunSuite {
     }
   }
 
+  test("kpi_month_stats over a one-year range: std 0.0, and the dashboard renders") {
+    // one year per calendar month leaves the sample std no degrees of
+    // freedom: the variance is NULL (DuckDB's x/0) and greatest()
+    // makes the std 0.0; an unguarded division raises DIVIDE_BY_ZERO
+    // under ANSI mode and fails the whole dashboard render
+    val one = TradeParams(Some(1997), Some(1997))
+    val rows = SparkEntry.queries("kpi_month_stats")(spark, one(sf)).collect()
+    assert(rows.length == 12)
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_years") == 1L)
+      assert(!r.isNullAt(r.fieldIndex("mean_export_m")))
+      assert(r.getAs[Double]("std_export_m") == 0.0)
+    }
+    assert(graft.Dashboard.render(spark, sf, one).contains("Estacionalidad"))
+  }
+
   test("kpi_contrib: deltas reconcile and shares/directions are consistent") {
     val rows = q("kpi_contrib").collect()
     assert(rows.nonEmpty, "bridge years missing from the corpus date range")

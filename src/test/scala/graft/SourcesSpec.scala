@@ -9,11 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine would use for a 100 TB fact table (partition by coarse
   * time, prune at plan time).
   */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
-  private lazy val tmp = Files.createTempDirectory("graft-sources").toString
+  private lazy val tmp = tempDir("graft-sources").toString
 
   test("splitLayout serves the same rows as the raw table, split across files") {
     import spark.implicits._
@@ -136,15 +136,10 @@ class SourcesSpec extends AnyFunSuite {
     // warehouse dirs persist — clear them or CTAS refuses the location
     for (t <- Seq("orders_bucketed", "lineitem_bucketed")) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = java.nio.file.Paths.get(
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse/$t")
-      if (java.nio.file.Files.exists(dir)) {
-        // recursive: a stale _temporary/ subdir from a killed JVM
-        // would make a flat delete fail silently
-        java.nio.file.Files.walk(dir)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      // recursive: a stale _temporary/ subdir from a killed JVM
+      // would make a flat delete fail silently
+      TestSpark.deleteTree(java.nio.file.Paths.get(
+        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse/$t"))
     }
     Tables(spark, sf).orders.select($"o_orderkey", $"o_totalprice")
       .write.mode("overwrite").bucketBy(8, "o_orderkey")
@@ -180,7 +175,7 @@ class SourcesSpec extends AnyFunSuite {
     // that would entangle books decoded concurrently. 64 small books,
     // each with distinct content, through the same readAllCells path
     // the etl entries use.
-    val dir = Files.createTempDirectory("graft-books")
+    val dir = tempDir("graft-books")
     (0 until 64).foreach { b =>
       val os = Files.newOutputStream(dir.resolve(f"book_$b%02d.xlsx"))
       try graft.sources.Xlsx.writeWorkbookSheets(os, Seq(
@@ -222,8 +217,8 @@ class SourcesSpec extends AnyFunSuite {
     // writer that discovers a FRESHER sibling under the lock must not
     // publish-and-prune (that would delete fresh data and resurrect
     // its own stale snapshot) — it fails loudly instead
-    val root = Files.createTempDirectory("graft-fixture-prune").toString
-    val srcDir = Files.createTempDirectory("graft-fixture-src")
+    val root = tempDir("graft-fixture-prune").toString
+    val srcDir = tempDir("graft-fixture-src")
     val src = srcDir.resolve("orders.parquet")
     Files.write(src, "v1".getBytes)
     Files.setLastModifiedTime(src,
@@ -238,6 +233,16 @@ class SourcesSpec extends AnyFunSuite {
     // pruning below
     val other = java.nio.file.Paths.get(root, "t_other_src.parquet_9_9")
     Files.createDirectories(other)
+    // a fixture of ANOTHER source whose sanitized name merely extends
+    // this one's ('orders.parquet_v2' vs 'orders.parquet'), published
+    // with a newer stamp: not a version sibling, so it neither trips
+    // the stale-writer check nor is pruned (r12 ADVICE)
+    val src2 = srcDir.resolve("orders.parquet_v2")
+    Files.write(src2, "w".getBytes)
+    Files.setLastModifiedTime(src2,
+      java.nio.file.attribute.FileTime.fromMillis(9000000L))
+    val extended = graft.Tables.publishFixture(root, srcDir.toString,
+      "orders.parquet_v2") { tmp => Files.createDirectories(java.nio.file.Paths.get(tmp)) }
     // source regenerated (newer mtime, same size): new dir published,
     // old version pruned
     Files.setLastModifiedTime(src,
@@ -248,6 +253,8 @@ class SourcesSpec extends AnyFunSuite {
       "superseded fixture version must be pruned")
     assert(Files.exists(java.nio.file.Paths.get(out2, "data.txt")))
     assert(Files.exists(other), "unrelated fixture pruned")
+    assert(Files.exists(java.nio.file.Paths.get(extended)),
+      "fixture of an extending source name pruned")
     // stale writer: the source's mtime moves BACKWARD relative to an
     // existing fresher sibling (equivalently: a fresher sibling
     // appeared while this writer was working) — must throw, publish
@@ -258,37 +265,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("regenerated"))
     assert(Files.exists(java.nio.file.Paths.get(out2, "data.txt")),
       "stale writer deleted the fresh fixture")
-    // LEGACY-format twin (pre-r13 key, no '@' hash) carrying the SAME
-    // version stamp as the live fixture: an oracle glob over the root
-    // would read both layouts' rows. A regular reuse-path call — no
-    // new key published — must sweep it.
-    Files.setLastModifiedTime(src,
-      java.nio.file.attribute.FileTime.fromMillis(2000000L))
-    val legacy = java.nio.file.Paths.get(root,
-      "t" + (srcDir.toString + "/orders.parquet")
-        .replaceAll("[^A-Za-z0-9._-]", "_") + "_2_2000000")
-    Files.createDirectories(legacy)
-    val out3 = publish()
-    assert(out3 == out2, "reuse path must serve the existing fixture")
-    assert(!Files.exists(legacy), "legacy-format twin must be swept")
-    assert(Files.exists(java.nio.file.Paths.get(out2, "data.txt")))
-    assert(Files.exists(other), "unrelated fixture swept by legacy prune")
-    // a legacy dir of a DIFFERENT logical source whose sanitized name
-    // merely EXTENDS this fixture's legacy prefix ('orders.parquet_v2'
-    // vs 'orders.parquet') is not a version sibling: with a newer
-    // stamp it must neither trip the stale-writer exception nor be
-    // swept — the remainder after the prefix must parse as exactly
-    // '<size>_<mtime>' to count as legacy (r13 ADVICE)
-    val extendeds = Seq(
-      java.nio.file.Paths.get(legacy.toString.stripSuffix("_2_2000000") +
-        "_v2_9_9999999"), // extra sanitized segment before the stamp
-      java.nio.file.Paths.get(legacy.toString.stripSuffix("_2_2000000") +
-        "_9_9999999_extra")) // extra segment after the stamp
-    extendeds.foreach(Files.createDirectories(_))
-    val out4 = publish() // newer-stamped colliding dirs present: must not throw
-    assert(out4 == out2, "reuse path must survive a colliding legacy-like dir")
-    assert(extendeds.forall(Files.exists(_)),
-      "colliding legacy-like dir of another source was swept")
   }
 
   test("a params-fragment session's prod fixture is invisible to the oracle's src_n match") {
@@ -298,21 +274,72 @@ class SourcesSpec extends AnyFunSuite {
     // NEGATIVE tag the count can never equal (r11 ADVICE)
     val frag = s"$sf#cat=large%20brushed%20brass"
     SparkEntry.queries("etl_parse_xlsx_prod")(spark, frag).collect()
+    SparkEntry.queries("etl_parse")(spark, frag).collect()
     import scala.jdk.CollectionConverters._
-    val v2 = java.nio.file.Paths.get(s"${graft.operators.Etl.prodRoot}/v2")
-    val fragDirs = Files.list(v2).iterator().asScala
-      .filter(_.getFileName.toString.contains("cat")).toList
-    assert(fragDirs.nonEmpty, "params fixture dir not found")
-    val srcNs = fragDirs.flatMap { d =>
-      Files.list(d.resolve("cells")).iterator().asScala
-        .filter(_.toString.endsWith(".csv")).toList
-        .flatMap { f =>
-          scala.io.Source.fromFile(f.toFile, "UTF-8").getLines().drop(1)
-            .map(_.split(',').last.toLong).toList
-        }
+    // src_n is the last column of both CSV twins; earlier cells may
+    // hold quoted commas
+    def srcNs(root: String, csvs: java.nio.file.Path => Seq[java.nio.file.Path]) = {
+      val fragDirs = Files.list(java.nio.file.Paths.get(root)).iterator().asScala
+        .filter(_.getFileName.toString.contains("cat")).toList
+      assert(fragDirs.nonEmpty, s"params fixture dir not found under $root")
+      fragDirs.flatMap(csvs).flatMap { f =>
+        scala.io.Source.fromFile(f.toFile, "UTF-8").getLines().drop(1)
+          .map(_.split(',').last.toLong).toList
+      }
     }
-    assert(srcNs.nonEmpty && srcNs.forall(_ < 0),
-      s"params fixture must carry a negative src_n tag: ${srcNs.distinct.take(3)}")
+    val prodNs = srcNs(graft.operators.Etl.prodRoot, d =>
+      Files.list(d.resolve("cells")).iterator().asScala
+        .filter(_.toString.endsWith(".csv")).toList)
+    val bookNs = srcNs(graft.operators.Etl.rawRoot, d => Seq(d.resolve("book.csv")))
+    for (ns <- Seq(prodNs, bookNs))
+      assert(ns.nonEmpty && ns.forall(_ < 0),
+        s"params fixture must carry a negative src_n tag: ${ns.distinct.take(3)}")
+  }
+
+  test("same-count drops with different prices each read their own raw book") {
+    // two drops with the same orders count, one with every price
+    // doubled, in one session: each parse returns its own drop's
+    // month totals, also when the first drop is read again after the
+    // second one's books were published
+    import spark.implicits._
+    val a = tempDir("graft-samecount-a")
+    val b = tempDir("graft-samecount-b")
+    Files.copy(java.nio.file.Paths.get(s"$sf/orders.parquet"), a.resolve("orders.parquet"))
+    val staged = b.resolve("staged")
+    spark.read.parquet(s"$sf/orders.parquet")
+      .withColumn("o_totalprice", $"o_totalprice" * 2.0)
+      .coalesce(1).write.parquet(staged.toString)
+    val kids = Files.list(staged)
+    try {
+      import scala.jdk.CollectionConverters._
+      Files.move(kids.iterator().asScala.find(_.toString.endsWith(".parquet")).get,
+        b.resolve("orders.parquet"))
+    } finally kids.close()
+    TestSpark.deleteTree(staged)
+    // (yr, mon, flow) → integer-dollar month total, straight from the
+    // drop's own parquet; the planted 'n.d.' cell parses to NULL
+    def expected(d: java.nio.file.Path): Map[(Int, Int, String), Long] =
+      spark.read.parquet(s"$d/orders.parquet")
+        .groupBy(year($"o_orderdate"), month($"o_orderdate"),
+          when($"o_orderstatus" === "F", "export").otherwise("import"))
+        .agg(floor(Det.dsum($"o_totalprice")))
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getString(2)) -> r.getLong(3))
+        .toMap - ((1997, 2, "export"))
+    def parsed(q: String, d: java.nio.file.Path): Map[(Int, Int, String), Long] =
+      SparkEntry.queries(q)(spark, d.toString).filter($"usd".isNotNull)
+        .select($"yr", $"mon", $"flow", $"usd").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getString(2)) -> r.getLong(3))
+        .toMap
+    val (wantA, wantB) = (expected(a), expected(b))
+    assert(Tables(spark, a.toString).orders.count() ==
+      Tables(spark, b.toString).orders.count())
+    assert(wantA != wantB)
+    for (q <- Seq("etl_parse", "etl_parse_xlsx")) {
+      assert(parsed(q, a) == wantA, s"$q on the first drop")
+      assert(parsed(q, b) == wantB, s"$q on the second drop")
+      assert(parsed(q, a) == wantA, s"$q on the first drop, read again")
+    }
   }
 
   test("tolerant xlsx ingest quarantines corrupt books instead of killing the scan") {
@@ -322,7 +349,7 @@ class SourcesSpec extends AnyFunSuite {
     // keep every good book's cells and surface one quarantine row per
     // bad book — including the SILENT class where junk bytes unzip to
     // zero worksheets and would otherwise vanish without signal
-    val dir = Files.createTempDirectory("graft-badbooks")
+    val dir = tempDir("graft-badbooks")
     def writeBook(name: String, tag: String): Array[Byte] = {
       val buf = new java.io.ByteArrayOutputStream()
       graft.sources.Xlsx.writeWorkbookSheets(buf, Seq(

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The streaming plans must produce the same results as their batch
   * oracles when fed the full input as one burst.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("event_id is unique — the contract behind stream_dedup's oracle") {
@@ -73,7 +73,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("checkpointed file-sink query recovers and does not reprocess") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val tmp = tempDir("graft-stream").toString
     def start() = EventsStream.windowedAgg(
         EventsStream.readStreamEvents(spark, sf)
           .withWatermark("ts", "2 hours"))
@@ -101,7 +101,7 @@ class StreamingSpec extends AnyFunSuite {
     // batch retried once, the committed batch not replayed.
     import spark.implicits._
     import org.apache.spark.sql.Dataset
-    val tmp = java.nio.file.Files.createTempDirectory("graft-restart")
+    val tmp = tempDir("graft-restart")
     val (src, out, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
     val all = Tables(spark, sf).events
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
@@ -267,7 +267,7 @@ class StreamingSpec extends AnyFunSuite {
     // above).
     import spark.implicits._
     import org.apache.spark.sql.{Dataset, Row}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-outer-restart")
+    val tmp = tempDir("graft-outer-restart")
     val (src, out, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
     val all = Tables(spark, sf).events
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
@@ -357,7 +357,7 @@ class StreamingSpec extends AnyFunSuite {
     // every real bucket.
     import spark.implicits._
     import org.apache.spark.sql.{Dataset, Row}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-topk-restart")
+    val tmp = tempDir("graft-topk-restart")
     val (src, out, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
     val all = Tables(spark, sf).events
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
@@ -437,7 +437,7 @@ class StreamingSpec extends AnyFunSuite {
     // comparable to the batch oracle as set equality.
     import spark.implicits._
     import org.apache.spark.sql.Dataset
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sess-restart")
+    val tmp = tempDir("graft-sess-restart")
     val (src, out, ckpt) = (s"$tmp/src", s"$tmp/out", s"$tmp/ckpt")
     val all = Tables(spark, sf).events
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")

@@ -134,10 +134,7 @@ class WarehouseSpec extends AnyFunSuite {
       assert(u.forall(_.getLong(2) == 1L))
     } finally {
       out.unpersist()
-      val stream = java.nio.file.Files.walk(tmp)
-      try stream.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally stream.close()
+      TestSpark.deleteWithFixtures(tmp)
     }
   }
 
@@ -174,10 +171,7 @@ class WarehouseSpec extends AnyFunSuite {
         spark.sql(s"DROP TABLE IF EXISTS ${TradeCatalog.refDb}.`$t`")
       }
       spark.sql(s"DROP DATABASE IF EXISTS ${TradeCatalog.refDb}")
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
+      TestSpark.deleteTree(java.nio.file.Paths.get(root))
     }
   }
 
@@ -260,10 +254,7 @@ class WarehouseSpec extends AnyFunSuite {
           java.nio.file.Paths.get(root, "_partial_junk"))
         assert(!TradeCatalog.attach(spark, root).contains("_partial_junk"))
       } finally {
-        val walk2 = java.nio.file.Files.walk(java.nio.file.Paths.get(root2))
-        try walk2.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk2.close()
+        TestSpark.deleteTree(java.nio.file.Paths.get(root2))
       }
     } finally {
       TradeCatalog.views.foreach { case (v, _) =>
@@ -273,10 +264,7 @@ class WarehouseSpec extends AnyFunSuite {
         spark.sql(s"DROP TABLE IF EXISTS ${TradeCatalog.db}.`$t`")
       }
       spark.sql(s"DROP DATABASE IF EXISTS ${TradeCatalog.db}")
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
+      TestSpark.deleteTree(java.nio.file.Paths.get(root))
     }
   }
 }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * CSV book — that is only sound if the two raw books really parse
   * to identical rows).
   */
-class XlsxSpec extends AnyFunSuite {
+class XlsxSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("xlsx writer → parser round-trips rows, escapes, and empty cells") {
@@ -36,7 +36,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("readSheets decodes a workbook through the binaryFile scan") {
-    val dir = Files.createTempDirectory("graft-xlsx")
+    val dir = tempDir("graft-xlsx")
     val rows = Seq(Seq("h1", "h2")) ++ (1 to 5).map(i => Seq(s"k$i", s"v$i"))
     val os = Files.newOutputStream(dir.resolve("t.xlsx"))
     try graft.sources.Xlsx.writeWorkbook(os, rows) finally os.close()
@@ -61,7 +61,7 @@ class XlsxSpec extends AnyFunSuite {
   }
 
   test("readAllCells explodes every sheet with 0-based pandas coordinates") {
-    val dir = Files.createTempDirectory("graft-xlsx-cells")
+    val dir = tempDir("graft-xlsx-cells")
     val sheets = Seq(
       "1999" -> Seq(Seq("p", "q"), Seq("r")),
       "2000" -> Seq(Seq("s")))

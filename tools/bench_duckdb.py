@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """DuckDB side of the matched bench pair (BASELINE.md protocol):
 run every oracle SQL from a Verify dump's oracle_sql.json over the
-sfDir parquet, threads=32, one warmup pass then min of N measured
-passes with warm views — the mirror of graft.Bench's steady-state
-mode. Writes BASELINE_DUCKDB.json in the cwd.
+sfDir parquet, one DuckDB thread per core, one warmup pass then min
+of N measured passes with warm views — the mirror of graft.Bench's
+steady-state mode. Writes BASELINE_DUCKDB.json in the cwd.
 
 Run back-to-back with graft.Bench on a quiet host (never while sbt
 or another bench is running); accept the pair only when the Spark
@@ -26,7 +26,8 @@ passes = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 warmup = "--no-warmup" not in sys.argv
 
 con = duckdb.connect()
-con.execute("SET threads TO 32")
+THREADS = os.cpu_count()
+con.execute(f"SET threads TO {THREADS}")
 # Same big-SF spill discipline as crosscheck.py: the timing pass
 # must survive the same ~74 GB temp ceiling the oracle pass does.
 # Insertion order is irrelevant here (fetchall, no compare) and
@@ -85,7 +86,7 @@ record = {
     "n": len(results),
     "n_failed": len(failed),
     "failed": sorted(failed),
-    "threads": 32,
+    "threads": THREADS,
     "sf": sf,
     "mode": f"min of {passes} passes, " +
         ("warm views" if warmup else "NO warmup pass (page cache pre-warmed externally)"),

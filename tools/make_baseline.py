@@ -266,51 +266,6 @@ head-to-heads: """
                       for q in sorted(c10, key=lambda q: -dq10[q])[:5])
           + ".\n")
 
-        # ---- third decade SCOUT: the sf100 slice (r16) ----
-        # Spark-only and slice-only by design: the r15 VERDICT's
-        # scouting item asks for the posting-family + ANN + multimodal
-        # slice (the 59 queries that read only documents/embeddings,
-        # generated by tools/make_sf100_slice.py) — a full sf100
-        # DuckDB pass extrapolates to 10+ hours from the sf10 decade
-        # and a full sf100 relational generation costs ~50 GB for
-        # queries the scout never runs, so there is deliberately no
-        # DuckDB column and no suite total here.
-        sf100_p = f"{ROOT}/BENCH_SF100_SLICE.json"
-        if os.path.exists(sf100_p):
-            s100 = json.load(open(sf100_p))
-            sq100 = s100["queries"]
-            if any(v < 0 for v in sq100.values()):
-                sys.exit("sf100 slice has failed queries: "
-                         + ", ".join(q for q, v in sorted(sq100.items()) if v < 0))
-            cs = sorted(set(sq100) & set(sq10) & set(sq1))
-            st100 = sum(sq100[q] for q in cs)
-            st10s = sum(sq10[q] for q in cs)
-            st1s = sum(sq1[q] for q in cs)
-            top_growth = sorted(cs, key=lambda q: -(sq100[q]))[:8]
-            w(f"""
-## Scaling SCOUT: sf100 slice (1000× the bench SF — third decade, Spark only)
-
-{s100.get("mode")}; master local[32], same host. Slice = the
-{len(sq100)} posting-family + ANN + multimodal + text/llm/graph
-queries that read only documents (5M rows) and embeddings (2M
-vectors), over `tools/make_sf100_slice.py`'s 1000× tiling of sf0.1
-(token-suffix perturbation / orthogonal rotation, directly from
-sf0.1 so tile suffixes cannot collide). No DuckDB column: a full
-sf100 oracle pass extrapolates to 10+ hours (see the sf10 decade),
-so this is a Spark growth scout, not a pair. Artifact:
-`BENCH_SF100_SLICE.json`.
-
-Slice wall across the decades ({len(cs)} common queries):
-
-| | sf1 | sf10 | sf100 | sf1→sf10 | sf10→sf100 |
-| --- | --- | --- | --- | --- | --- |
-| Spark local[32] | {st1s:.1f} s | {st10s:.1f} s | {st100:.1f} s | {st10s / st1s:.1f}× | {st100 / st10s:.1f}× |
-
-Largest sf100 slice queries (sec; growth vs sf10): """
-              + ", ".join(
-                  f"{q} {sq100[q]:.1f}s ({sq100[q] / sq10[q]:.1f}×)"
-                  for q in top_growth) + ".\n")
-
 # refuse to WRITE from a noisy pair: BASELINE.md must only ever
 # describe an accepted pair (the gate in bench_pair.sh also rejects,
 # but this assertion holds for direct invocations too)
