@@ -95,8 +95,7 @@ object Dashboard {
       nTop = args.lift(5).map(_.toInt),
       viewType = args.lift(6),
       analysisType = args.lift(7))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.local(cpus, Some(sfDir))
+    val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/dashboard.md"),

@@ -54,8 +54,7 @@ object Pipeline {
       println(f"input ok: $f%-18s $kb%6d KB  ($desc)")
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.local(cpus, Some(sfDir))
+    val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
 

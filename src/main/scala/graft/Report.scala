@@ -428,8 +428,7 @@ object Report {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("target/reports")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.local(cpus, Some(sfDir))
+    val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
 
     def q(name: String) = SparkEntry.queries(name)(spark, sfDir)

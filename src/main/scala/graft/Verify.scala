@@ -13,8 +13,7 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only).toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus, Some(sfDir))
+    val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>

@@ -178,6 +178,13 @@ object GraftSession {
     case _: Exception => None
   }
 
+  /** SPARK_GRAFT_CPUS, read here only: the `local[n]` width every main
+    * passes to [[local]]. Unset, one thread per core — a wider default
+    * oversubscribes the host.
+    */
+  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** `dataDir`: the data directory the session will serve, for the
     * measured shuffle-width dial — mains that take the dir as an
     * argument (Verify) pass it; the rest inherit SPARK_GRAFT_SF_DIR.
@@ -661,37 +668,25 @@ object Tables {
   }
 }
 
-/** Bounded keyed cache for expensive corpus-level plan artifacts
-  * (shingle postings, minhash/simhash signatures, candidate pairs) —
-  * deterministic per (session, dir), shared by every operator that
-  * consumes them, so steady-state reruns skip the derivation stages.
-  *
-  * The builder runs OUTSIDE the monitor: a concurrent first caller
-  * may duplicate the build, but no caller ever blocks on another's
-  * cluster job. Keeps the `bound` most-recently-used entries (tests
-  * and the bench interleave at most two SF dirs); evicted or
-  * race-losing frames are released via `onEvict` (unpersist for
-  * persisted frames; the default no-op suits localCheckpoint frames,
-  * whose blocks are GC-freed).
+/** Bounded LRU with the build OUTSIDE the monitor: a concurrent
+  * first caller may duplicate the build, but no caller ever blocks on
+  * another's cluster job (a racing duplicate is benign — the cached
+  * values are deterministic). Keeps the `bound` most-recently-used
+  * entries, evicting the eldest one at a time instead of clearing
+  * wholesale (which dropped hot entries for live sessions); evicted
+  * and race-losing values are released through `onEvict`.
   */
-private[graft] final class PlanCache(bound: Int = 2,
-    onEvict: DataFrame => Unit = _ => ()) {
-  PlanCache.register(this)
-  private val m =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true)
-  def getOrBuild(spark: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
-    val key = (spark, dir)
-    m.synchronized { val hit = m.get(key); if (hit != null) return hit }
+private[graft] class LruCache[K, V <: AnyRef](bound: Int = 8, onEvict: V => Unit = (_: V) => ()) {
+  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
+  def getOrBuild(k: K)(build: => V): V = {
+    m.synchronized { val hit = m.get(k); if (hit != null) return hit }
     val built = build
     m.synchronized {
-      val prior = m.get(key)
+      val prior = m.get(k)
       if (prior != null) { onEvict(built); prior }
       else {
-        m.put(key, built)
-        while (m.size() > bound) {
-          val eldest = m.keySet().iterator().next()
-          onEvict(m.remove(eldest))
-        }
+        m.put(k, built)
+        while (m.size() > bound) onEvict(m.remove(m.keySet().iterator().next()))
         built
       }
     }
@@ -701,6 +696,21 @@ private[graft] final class PlanCache(bound: Int = 2,
     val it = m.values().iterator()
     while (it.hasNext) { onEvict(it.next()); it.remove() }
   }
+}
+
+/** [[LruCache]] of expensive corpus-level plan artifacts (shingle
+  * postings, minhash/simhash signatures, candidate pairs) —
+  * deterministic per (session, dir), shared by every operator that
+  * consumes them, so steady-state reruns skip the derivation stages.
+  * Tests and the bench interleave at most two SF dirs, hence bound 2;
+  * `onEvict` unpersists persisted frames (the default no-op suits
+  * localCheckpoint frames, whose blocks are GC-freed).
+  */
+private[graft] final class PlanCache(bound: Int = 2, onEvict: DataFrame => Unit = _ => ())
+    extends LruCache[(SparkSession, String), DataFrame](bound, onEvict) {
+  PlanCache.register(this)
+  def getOrBuild(spark: SparkSession, dir: String)(build: => DataFrame): DataFrame =
+    getOrBuild((spark, dir))(build)
 }
 
 private[graft] object PlanCache {
@@ -714,32 +724,6 @@ private[graft] object PlanCache {
     */
   def clearAll(): Unit =
     instances.synchronized { instances.foreach(_.clear()) }
-}
-
-/** Bounded LRU for small per-(session, corpus) scalars and models
-  * (measured row counts, k-means seed arrays) — the non-DataFrame
-  * sibling of [[PlanCache]], same discipline: keyed eviction of the
-  * eldest entry instead of wholesale clears (which dropped hot
-  * entries for live sessions and held stopped-session keys until the
-  * next overflow), build outside the monitor so no caller blocks on
-  * another's cluster job (a racing duplicate build is benign — the
-  * cached values are deterministic).
-  */
-private[graft] final class LruCache[K, V <: AnyRef](bound: Int = 8) {
-  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
-  def getOrBuild(k: K)(build: => V): V = {
-    m.synchronized { val hit = m.get(k); if (hit != null) return hit }
-    val built = build
-    m.synchronized {
-      val prior = m.get(k)
-      if (prior != null) prior
-      else {
-        m.put(k, built)
-        while (m.size() > bound) m.remove(m.keySet().iterator().next())
-        built
-      }
-    }
-  }
 }
 
 /** Session-conf parsing with errors that name the offending conf —

@@ -2,7 +2,8 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** THE single bridge into Spark's `private[sql]` surface.
+/** THE single bridge into Spark's `private[sql]` / `private[spark]`
+  * surface.
   *
   * Spark 4 hides the Expression-backed Column constructor behind
   * `org.apache.spark.sql.classic.ExpressionUtils` (private[sql]);
@@ -26,4 +27,11 @@ object GraftShim {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every listener event posted so far has been
+    * delivered (the listener bus is asynchronous and private[spark]),
+    * so counts read afterwards are complete without sleeping.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

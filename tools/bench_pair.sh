@@ -1,8 +1,8 @@
 #!/bin/bash
 # Matched quiet-floor bench pair (BASELINE.md protocol), one command:
 #   1. wait for a quiet host (1-min loadavg below threshold),
-#   2. graft.Bench (Spark local[32], sf0.1) -> BENCH_SELF.json,
-#   3. tools/bench_duckdb.py (same oracles, threads=32)
+#   2. graft.Bench (Spark, one thread per core, sf0.1) -> BENCH_SELF.json,
+#   3. tools/bench_duckdb.py (same oracles, one thread per core)
 #      -> BASELINE_DUCKDB.json, back-to-back,
 #   4. tools/make_baseline.py -> BASELINE.md regenerated from the two
 #      artifacts (never hand-copied).
@@ -73,7 +73,7 @@ marker=$(mktemp /tmp/bench_start.XXXXXX)
 # SPARK_GRAFT_WRITE_SELF=1: graft.Bench only writes the repo-root
 # BENCH_SELF.json under this flag (any other run dumps to tmp), so
 # this script is the ONLY writer of the committed triple
-SPARK_GRAFT_SF_DIR=$SF SPARK_GRAFT_CPUS=32 SPARK_GRAFT_WRITE_SELF=1 \
+SPARK_GRAFT_SF_DIR=$SF SPARK_GRAFT_WRITE_SELF=1 \
   tools/run_verify.sh "$SF" "$OUT" graft.Bench
 if [ ! BENCH_SELF.json -nt "$marker" ]; then
   rm -f "$marker"
