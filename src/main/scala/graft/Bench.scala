@@ -13,8 +13,9 @@ import org.apache.spark.sql.execution.window.WindowExec
   * SPARK_GRAFT_SF_DIR through a noop sink, one warm-up pass then
   * SPARK_GRAFT_PASSES measured passes, and records per query the
   * warm-up time, the min of the measured passes, the jobs, stages and
-  * tasks of the last measured pass and the operator census of its
-  * physical plan.
+  * tasks of the last measured pass, the operator census of its
+  * physical plan, and the [[Artifacts]] builds of the warm-up run and
+  * of the last measured pass.
   *
   * Knobs (environment): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_ONLY (comma-separated subset), SPARK_GRAFT_PASSES,
@@ -31,14 +32,20 @@ import org.apache.spark.sql.execution.window.WindowExec
 object Bench {
   type Query = (SparkSession, String) => DataFrame
 
-  /** One query's record; -1 marks what failed (a run, or the plan). */
+  /** One query's record; -1 marks what failed (a run, or the plan).
+    * `builds` counts the artifacts its warm-up run built, `rebuilds`
+    * those its last measured pass built again: anything but 0 there
+    * is an artifact the store failed to hold.
+    */
   final case class Record(query: String, firstS: Double, minS: Double,
       jobs: Long, stages: Long, tasks: Long,
-      exchanges: Int, sorts: Int, windows: Int, aggregates: Int) {
+      exchanges: Int, sorts: Int, windows: Int, aggregates: Int,
+      builds: Long, rebuilds: Long) {
     def json: String =
       s"""{"query":"$query","first_s":${ms(firstS)},"min_s":${ms(minS)},""" +
         s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
-        s""""exchanges":$exchanges,"sorts":$sorts,"windows":$windows,"aggregates":$aggregates}"""
+        s""""exchanges":$exchanges,"sorts":$sorts,"windows":$windows,"aggregates":$aggregates,""" +
+        s""""builds":$builds,"rebuilds":$rebuilds}"""
   }
 
   /** A record per query plus the floor probes bracketing the passes. */
@@ -132,9 +139,11 @@ object Bench {
     val counts = new JobCounts
     sc.addSparkListener(counts)
     try {
-      def timed(pass: Int, name: String, fn: Query): Double = {
+      // (seconds, Artifacts builds) of one run
+      def timed(pass: Int, name: String, fn: Query): (Double, Long) = {
         sc.setJobGroup(s"$pass:$name", name, interruptOnCancel = false)
-        try {
+        val b0 = Artifacts.builds
+        val t = try {
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
@@ -143,6 +152,7 @@ object Bench {
           System.err.println(s"[bench] $what: ${e.getMessage}")
           -1.0
         } finally sc.clearJobGroup()
+        (t, Artifacts.builds - b0)
       }
       val first = queries.map { case (name, fn) => timed(0, name, fn) }
       val floorSamples = scala.collection.mutable.ArrayBuffer(stageFloorProbe(spark))
@@ -165,11 +175,11 @@ object Bench {
       val aqe = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val records = try queries.zipWithIndex.map { case ((name, fn), i) =>
-        val ok = passes.map(_(i)).filter(_ >= 0)
+        val ok = passes.map(_(i)._1).filter(_ >= 0)
         val (jobs, stages, tasks) = counts.of(s"$nPasses:$name")
         val (ex, so, wi, ag) = census(spark, sfDir, name, fn, explain)
-        Record(name, first(i), if (ok.isEmpty) -1.0 else ok.min,
-          jobs, stages, tasks, ex, so, wi, ag)
+        Record(name, first(i)._1, if (ok.isEmpty) -1.0 else ok.min,
+          jobs, stages, tasks, ex, so, wi, ag, first(i)._2, passes.last(i)._2)
       } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
       Measured(records, floor, floorSamples.toSeq)
     } finally sc.removeSparkListener(counts)

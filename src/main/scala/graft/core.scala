@@ -21,7 +21,10 @@ final case class Q(
   * of being mutated as side effects inside table loaders.
   */
 object GraftSession {
+  /** `cpus` is the `local[n]` width, normally [[defaultCpus]]. */
   def builder(cpus: String): SparkSession.Builder = {
+    require(cpus.matches("[0-9]+") && cpus.toIntOption.exists(_ > 0),
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus'")
     // Pin the JVM default locale before anything formats a number:
     // the f"" interpolator is String.format under the DEFAULT
     // locale, so on a decimal-comma host (es_PE — the observatory's
@@ -193,7 +196,7 @@ object GraftSession {
     val b = builder(cpus)
     for {
       dir <- dataDir.orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
-      parts <- measuredShuffleParts(dir, cpus.toIntOption.getOrElse(32))
+      parts <- measuredShuffleParts(dir, cpus.toInt)
     } b.config("spark.sql.shuffle.partitions", parts.toString)
     val s = withOverrides(b).getOrCreate()
     // WindowExec warns "No Partition Defined ... all the data to a
@@ -226,7 +229,7 @@ object GraftSession {
   * string (`dir#yf=1996&yt=1998&flow=export&cat=...`) so the
   * parameterization rides the existing `(SparkSession, dir)` operator
   * signature: every oracle-checked operator runs UNCHANGED against
-  * the filtered source, PlanCache keys (keyed on the full dir string)
+  * the filtered source, Artifacts keys (keyed on the full dir string)
   * never mix filtered and unfiltered artifacts, and the predicates
   * sit directly above the parquet scans where Catalyst pushes them
   * into the reader (PushedFilters — asserted by DashboardSpec).
@@ -532,20 +535,17 @@ object Tables {
     })
   }
 
-  /** Resolved-relation cache: `spark.read.parquet` re-lists the
-    * directory and re-reads footers for schema on EVERY call, which
-    * surfaces as a ~1-task job ahead of each query invocation —
-    * pure fixed cost, ~130 queries deep per bench pass. Table
-    * relations are immutable for a session's lifetime here (the
-    * split/fixture layouts are content-keyed by (size, mtime), so a
-    * regenerated source lands at a NEW path), which makes the
-    * resolved frame safely reusable. Bounded, keyed by session so a
-    * test JVM's 4-core session never serves a bench session.
+  /** Resolved relation, kept in [[Artifacts]] under the path read:
+    * `spark.read.parquet` re-lists the directory and re-reads footers
+    * for schema on EVERY call, which surfaces as a ~1-task job ahead
+    * of each query invocation — pure fixed cost, ~130 queries deep
+    * per bench pass. Table relations are immutable for a session's
+    * lifetime here (the split/fixture layouts are content-keyed by
+    * (size, mtime), so a regenerated source lands at a NEW path),
+    * which makes the resolved frame safely reusable.
     */
-  private val frameCache =
-    new LruCache[(SparkSession, String), DataFrame](64)
   private[graft] def cachedRead(spark: SparkSession, p: String): DataFrame =
-    frameCache.getOrBuild((spark, p))(spark.read.parquet(p))
+    Artifacts(spark, p, "Tables.read")(spark.read.parquet(p))
 
   /** The publish-or-reuse protocol for every on-disk artifact derived
     * from one source file: the relayout copies ([[splitLayout]]), the
@@ -556,7 +556,10 @@ object Tables {
     * winner publishes via atomic rename, losers delete their copy
     * instead of throwing FileAlreadyExistsException. `write` receives
     * the private tmp path; the returned path is the published
-    * directory.
+    * directory. Each fixture records its physical source path in
+    * `_source` (hidden from Spark's listing, matched by no oracle
+    * glob), and every publish deletes the entries under its root
+    * whose source file is gone: nothing can reach them again.
     */
   private[graft] def publishFixture(root: String, rawDir: String, srcFile: String)(
       write: String => Unit): String = {
@@ -598,14 +601,21 @@ object Tables {
     // version stamp so pruning is ORDERED, not mutual
     def siblingMtime(name: String): Long =
       name.split('_').lastOption.flatMap(_.toLongOption).getOrElse(Long.MaxValue)
-    def listSibs(): List[java.nio.file.Path] = {
+    def listRoot(keep: java.nio.file.Path => Boolean): List[java.nio.file.Path] = {
       import scala.jdk.CollectionConverters._
       val kids = Files.list(out.getParent)
-      try kids.iterator().asScala.filter { p =>
-        val name = p.getFileName.toString
-        name != key && name.startsWith(prefix + "_")
-      }.toList
+      try kids.iterator().asScala.filter(keep).toList
       finally kids.close()
+    }
+    def listSibs(): List[java.nio.file.Path] = listRoot { p =>
+      val name = p.getFileName.toString
+      name != key && name.startsWith(prefix + "_")
+    }
+    // published entries (not a writer's .tmp_ dir) whose source is gone
+    def listOrphans(): List[java.nio.file.Path] = listRoot { p =>
+      val stamp = p.resolve("_source")
+      !p.getFileName.toString.startsWith(".") && Files.isRegularFile(stamp) &&
+        !Files.exists(Paths.get(Files.readString(stamp)))
     }
     // Cross-JVM writers are supported (publishOrYield), so every
     // fresher-sibling check → publish → prune sequence must be
@@ -632,6 +642,7 @@ object Tables {
       val tmp = Paths.get(out.getParent.toString,
         s".tmp_${key}_${java.util.UUID.randomUUID()}")
       write(tmp.toString)
+      Files.writeString(tmp.resolve("_source"), src.toAbsolutePath.toString)
       withLocks {
         val sibs = listSibs()
         if (sibs.exists(p => siblingMtime(p.getFileName.toString) > myMtime)) {
@@ -662,68 +673,92 @@ object Tables {
           // it — its world was stale either way.
           sibs.foreach(deleteRecursively(_))
         }
+        listOrphans().foreach(deleteRecursively(_))
       }
     }
     out.toString
   }
 }
 
-/** Bounded LRU with the build OUTSIDE the monitor: a concurrent
-  * first caller may duplicate the build, but no caller ever blocks on
-  * another's cluster job (a racing duplicate is benign — the cached
-  * values are deterministic). Keeps the `bound` most-recently-used
-  * entries, evicting the eldest one at a time instead of clearing
-  * wholesale (which dropped hot entries for live sessions); evicted
-  * and race-losing values are released through `onEvict`.
+/** The one in-memory store for derived artifacts: resolved table
+  * relations, measured counts and seeds, and the corpus and KPI
+  * frames (postings, signatures, candidate pairs, indexes, grains).
+  * Each is deterministic per (session, dir, derivation), so a rerun
+  * reuses it instead of re-deriving it. The build runs OUTSIDE the
+  * monitor: a concurrent first caller may duplicate a build, but no
+  * caller ever blocks on another's cluster job. The `bound`
+  * most-recently-used entries are kept, evicting the eldest one at a
+  * time. Evicted and race-losing values are released by one rule: a
+  * frame with a storage level is unpersisted, anything else (a
+  * localCheckpoint frame, whose blocks the ContextCleaner frees once
+  * unreferenced; a count; a seed array) is dropped.
   */
-private[graft] class LruCache[K, V <: AnyRef](bound: Int = 8, onEvict: V => Unit = (_: V) => ()) {
-  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
-  def getOrBuild(k: K)(build: => V): V = {
-    m.synchronized { val hit = m.get(k); if (hit != null) return hit }
+private[graft] final class Artifacts(bound: Int) {
+  private val m = new java.util.LinkedHashMap[(SparkSession, String, String), AnyRef](16, 0.75f, true)
+  private val nBuilds = new java.util.concurrent.atomic.AtomicLong
+  private val nHits = new java.util.concurrent.atomic.AtomicLong
+  def builds: Long = nBuilds.get
+  def hits: Long = nHits.get
+
+  def apply[V <: AnyRef](spark: SparkSession, dir: String, name: String)(build: => V): V = {
+    val k = (spark, dir, name)
+    m.synchronized {
+      val hit = m.get(k)
+      if (hit != null) { nHits.incrementAndGet(); return hit.asInstanceOf[V] }
+    }
     val built = build
+    nBuilds.incrementAndGet()
     m.synchronized {
       val prior = m.get(k)
-      if (prior != null) { onEvict(built); prior }
+      if (prior != null) { Artifacts.release(built); prior.asInstanceOf[V] }
       else {
         m.put(k, built)
-        while (m.size() > bound) onEvict(m.remove(m.keySet().iterator().next()))
+        while (m.size() > bound) Artifacts.release(m.remove(m.keySet().iterator().next()))
         built
       }
     }
   }
-  /** Drop every entry (releasing each through onEvict). */
+
+  /** Drop every entry, releasing each. */
   def clear(): Unit = m.synchronized {
     val it = m.values().iterator()
-    while (it.hasNext) { onEvict(it.next()); it.remove() }
+    while (it.hasNext) { Artifacts.release(it.next()); it.remove() }
   }
 }
 
-/** [[LruCache]] of expensive corpus-level plan artifacts (shingle
-  * postings, minhash/simhash signatures, candidate pairs) —
-  * deterministic per (session, dir), shared by every operator that
-  * consumes them, so steady-state reruns skip the derivation stages.
-  * Tests and the bench interleave at most two SF dirs, hence bound 2;
-  * `onEvict` unpersists persisted frames (the default no-op suits
-  * localCheckpoint frames, whose blocks are GC-freed).
-  */
-private[graft] final class PlanCache(bound: Int = 2, onEvict: DataFrame => Unit = _ => ())
-    extends LruCache[(SparkSession, String), DataFrame](bound, onEvict) {
-  PlanCache.register(this)
-  def getOrBuild(spark: SparkSession, dir: String)(build: => DataFrame): DataFrame =
-    getOrBuild((spark, dir))(build)
-}
-
-private[graft] object PlanCache {
-  private val instances = scala.collection.mutable.ArrayBuffer.empty[PlanCache]
-  private def register(c: PlanCache): Unit =
-    instances.synchronized { instances += c }
-  /** Test hook: empty every cache so plan-shape specs assert against
-    * the FULL derivation plan, not a checkpoint scan left warm by an
-    * earlier suite (a warm cache would make a no-broadcast or
-    * no-cartesian guard pass vacuously).
+private[graft] object Artifacts {
+  /** A full `graft.Bench` pass over one sf0.01 dir leaves 50 entries
+    * (10 table reads, 36 derivations, 4 measured counts); twice that
+    * lets two dirs interleave (a test JVM and its fixtures, a filtered
+    * and an unfiltered dashboard view) without evicting each other.
     */
-  def clearAll(): Unit =
-    instances.synchronized { instances.foreach(_.clear()) }
+  private val Bound = 100
+
+  private val store = new Artifacts(Bound)
+
+  /** The artifact `name` (conventionally "<Module>.<def>") of `dir`,
+    * built at most once per session while it stays in the store.
+    */
+  def apply[V <: AnyRef](spark: SparkSession, dir: String, name: String)(build: => V): V =
+    store(spark, dir, name)(build)
+
+  /** Builds and hits since the JVM started; Bench reads the builds. */
+  def builds: Long = store.builds
+  def hits: Long = store.hits
+
+  /** Empty the store, so plan-shape specs assert against the FULL
+    * derivation plan, not a checkpoint scan left warm by an earlier
+    * suite (a warm artifact would make a no-broadcast or no-cartesian
+    * guard pass vacuously).
+    */
+  def clear(): Unit = store.clear()
+
+  private def release(v: AnyRef): Unit = v match {
+    case df: org.apache.spark.sql.Dataset[_] =>
+      try if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df.unpersist(false)
+      catch { case _: Throwable => () }
+    case _ => ()
+  }
 }
 
 /** Session-conf parsing with errors that name the offending conf —

@@ -332,7 +332,6 @@ object Advanced {
     * rows to the sketch either way: one h per distinct customer per
     * status.
     */
-  private val kmvPostingCache = new graft.PlanCache()
   private[graft] def kmvPostingPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val h = graft.functions.RollingHash.rolling_hash(
@@ -342,7 +341,7 @@ object Advanced {
       .select($"o_orderstatus", h.as("h"))
   }
   private def kmvPosting(spark: SparkSession, dir: String): DataFrame =
-    kmvPostingCache.getOrBuild(spark, dir) {
+    graft.Artifacts(spark, dir, "Advanced.kmvPosting") {
       kmvPostingPlan(spark, dir).localCheckpoint()
     }
 

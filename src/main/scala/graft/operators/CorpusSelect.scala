@@ -519,9 +519,8 @@ object CorpusSelect {
     * it — the build aggregation is index cost, not per-query cost
     * (same convention as lshIndex / the CC label caches).
     */
-  private val bloomFilterCache = new graft.PlanCache()
   private[graft] def bloomFilter(spark: SparkSession, dir: String): DataFrame =
-      bloomFilterCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "CorpusSelect.bloomFilter") {
     bloomFilterPlan(spark, dir).localCheckpoint()
   }
 
@@ -547,20 +546,12 @@ object CorpusSelect {
     * of a bounded-by-construction frame (8 KB at any corpus size) and
     * is cached per (session, corpus) alongside the frame form.
     */
-  private val bloomArrayCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Long]]()
-  private[graft] def bloomFilterArray(spark: SparkSession, dir: String): Array[Long] = {
-    val key = (spark, dir)
-    val hit = bloomArrayCache.get(key)
-    if (hit != null) hit
-    else {
-      val arr = new Array[Long](bloomWords)
-      bloomFilter(spark, dir).collect()
-        .foreach(r => arr(r.getLong(0).toInt) = r.getLong(1))
-      if (bloomArrayCache.size > 8) bloomArrayCache.clear()
-      bloomArrayCache.putIfAbsent(key, arr)
-      arr
-    }
+  private[graft] def bloomFilterArray(spark: SparkSession, dir: String): Array[Long] =
+      graft.Artifacts(spark, dir, "CorpusSelect.bloomFilterArray") {
+    val arr = new Array[Long](bloomWords)
+    bloomFilter(spark, dir).collect()
+      .foreach(r => arr(r.getLong(0).toInt) = r.getLong(1))
+    arr
   }
 
   private def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
@@ -727,10 +718,9 @@ object CorpusSelect {
   // must be relocatable; SourcesSpec references these constants
   private[graft] val jsonlRoot =
     s"${System.getProperty("java.io.tmpdir")}/graft-fixtures/corpus_jsonl"
-  private val jsonlCache = new graft.PlanCache()
 
   private def jsonlDocs(spark: SparkSession, dir: String): DataFrame =
-      jsonlCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "CorpusSelect.jsonlDocs") {
     import spark.implicits._
     // Tables.publishFixture keys on (source path, size, mtime): a
     // count-based key would collide across SFs (sf0.001 and sf0.01
@@ -820,11 +810,10 @@ object CorpusSelect {
 
   private[graft] val exportRoot =
     s"${System.getProperty("java.io.tmpdir")}/graft-fixtures/corpus_shards"
-  private val exportCache = new graft.PlanCache()
   private val nExportShards = 16
 
   private def exportedShards(spark: SparkSession, dir: String): DataFrame =
-      exportCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "CorpusSelect.exportedShards") {
     import spark.implicits._
     // same shared (path, size, mtime)-keyed publish protocol as the
     // jsonl fixture — see jsonlDocs

@@ -208,23 +208,6 @@ object Dedup {
   // array intersection — ~100× faster than the pairwise-array form
   // at sf0.1 and the only formulation that survives 100 TB.
 
-  /** (doc_id, shingle) postings via posexplode + window `lead` —
-    * O(tokens) per doc and fully parallel. The tempting
-    * `explode(shingles3(toks))` form is O(tokens²): CollapseProject
-    * inlines the split() into every element_at inside the lambda,
-    * and higher-order lambdas are evaluated interpreted.
-    *
-    * The posting is referenced 3-4x per dedup query (sizes + both
-    * join sides) and by four different dedup queries, so it is
-    * persisted — but through the BOUNDED keyed PlanCache, not a fresh
-    * persist per call: unbounded per-invocation persists would pin a
-    * new copy every query for the life of the session (Bench runs
-    * every query twice → a dozen pinned copies ≈ a storage leak).
-    * Evicted postings are actually unpersisted.
-    */
-  private val postingCache = new graft.PlanCache(
-    onEvict = df => try df.unpersist(false) catch { case _: Throwable => () })
-
   /** Document-frequency cap on the shingle universe. A shingle that
     * occurs in more than this many documents is corpus boilerplate
     * (template headers, license blurbs): it carries no near-dup
@@ -264,8 +247,22 @@ object Dedup {
     posting.withColumn("sh_df", count(lit(1)).over(wSh))
   }
 
+  /** (doc_id, shingle) postings via posexplode + window `lead` —
+    * O(tokens) per doc and fully parallel. The tempting
+    * `explode(shingles3(toks))` form is O(tokens²): CollapseProject
+    * inlines the split() into every element_at inside the lambda,
+    * and higher-order lambdas are evaluated interpreted.
+    *
+    * The posting is referenced 3-4x per dedup query (sizes + both
+    * join sides) and by four different dedup queries, so it is
+    * persisted — but through the BOUNDED keyed graft.Artifacts store,
+    * not a fresh persist per call: unbounded per-invocation persists
+    * would pin a new copy every query for the life of the session
+    * (Bench runs every query twice → a dozen pinned copies ≈ a storage
+    * leak). Evicted postings are unpersisted.
+    */
   private[graft] def shinglePosting(spark: SparkSession, dir: String): DataFrame = {
-    val withDf = postingCache.getOrBuild(spark, dir) {
+    val withDf = graft.Artifacts(spark, dir, "Dedup.shinglePosting") {
       import spark.implicits._
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"doc_id").orderBy($"pos")
@@ -280,7 +277,7 @@ object Dedup {
         .dropDuplicates("doc_id", "shingle"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // loud cap report, once per cache fill (this action also warms
-      // the cache; the PlanCache builder runs outside its monitor):
+      // the cache; the Artifacts builder runs outside its monitor):
       // silent key-dropping would read as "covered everything" when
       // it didn't
       val nHot = posting.filter(col("sh_df") > shingleDfCap)
@@ -295,22 +292,18 @@ object Dedup {
     withDf.filter(col("sh_df") <= shingleDfCap).select("doc_id", "shingle")
   }
 
-  private val docSizeCache = new graft.PlanCache()
-
   /** Per-doc discriminative-shingle counts (doc_id, n_sh) — the
     * Jaccard denominator's inputs, one row per doc, cached like the
     * posting they aggregate (judge r3: "pre-aggregate posting sizes
     * into the cached frame").
     */
   private[graft] def docShingleSizes(spark: SparkSession, dir: String): DataFrame =
-      docSizeCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Dedup.docShingleSizes") {
     import spark.implicits._
     shinglePosting(spark, dir)
       .groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
       .localCheckpoint()
   }
-
-  private val ngramPairCache = new graft.PlanCache()
 
   /** Near-dup pairs (J >= 0.5) via the inverted index; shared by the
     * pair listing and the cluster builder — BOTH consumed this frame
@@ -318,7 +311,7 @@ object Dedup {
     * checkpointed pair list is cached like the posting.
     */
   private def ngramPairs(spark: SparkSession, dir: String): DataFrame =
-    ngramPairCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Dedup.ngramPairs")(
       ngramPairsPlan(spark, dir).localCheckpoint())
 
   /** The near-dup threshold — ONE definition shared by the batch pair
@@ -521,10 +514,8 @@ object Dedup {
     * localCheckpoint, so eviction just drops the reference (the
     * checkpoint blocks free with it via the ContextCleaner).
     */
-  private val ccCache = new graft.PlanCache()
-
   private def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-      ccCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Dedup.clusterLabels") {
     import spark.implicits._
     connectedComponents(
       ngramPairs(spark, dir).select($"a_id", $"b_id")).localCheckpoint()
@@ -643,18 +634,14 @@ object Dedup {
   private def seededSql(i: Int, h: String): String =
     s"(${seedA(i)} * $h + ${seedB(i)}) % $hashP"
 
-  /** Cached LSH band-collision candidates: the signature/band/
-    * self-join stages are the expensive half of the minhash pipeline,
-    * and their result — the candidate pair list — is a deterministic
-    * corpus artifact like the posting itself.
-    */
-  private val minhashCandCache = new graft.PlanCache()
-
   /** Candidate pairs (a_id < b_id) whose minhash signatures collide
-    * in at least one band, checkpointed and cached per (session, dir).
+    * in at least one band, checkpointed and cached per (session, dir):
+    * the signature/band/self-join stages are the expensive half of the
+    * minhash pipeline, and their result is a deterministic corpus
+    * artifact like the posting itself.
     */
   private[graft] def minhashCandidates(spark: SparkSession, dir: String): DataFrame =
-    minhashCandCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Dedup.minhashCandidates")(
       minhashCandidatesPlan(spark, dir).localCheckpoint())
 
   /** The UNCHECKPOINTED candidate derivation — the plan the shape
@@ -697,9 +684,8 @@ object Dedup {
     * candidate-derived frames, equi-join only) assert on this
     * UNCHECKPOINTED builder.
     */
-  private val minhashPairCache = new graft.PlanCache()
   private def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    minhashPairCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Dedup.minhashPairs")(
       minhashPairsPlan(spark, dir).localCheckpoint())
 
   private def dedupMinhash(spark: SparkSession, dir: String): DataFrame = {
@@ -870,15 +856,13 @@ object Dedup {
   // pairs; ≤6 keeps the near-dup band (~1% of pairs at sf0.01)
   private val simThreshold = 6
 
-  private val simhashSigCache = new graft.PlanCache()
-
   /** Per-doc 60-bit simhash signatures (doc_id, sig), checkpointed
     * and cached per (session, dir) — the token explode + 60-counter
     * vote aggregate is the expensive half of the pipeline and the
     * signatures are a deterministic corpus artifact like the posting.
     */
   private def simhashDocs(spark: SparkSession, dir: String): DataFrame =
-    simhashSigCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Dedup.simhashDocs")(
       simhashDocsPlan(spark, dir).localCheckpoint())
 
   /** The UNCHECKPOINTED signature derivation (for plan-shape guards). */
@@ -1044,9 +1028,8 @@ object Dedup {
     * (signatures + band self-join), cached like the minhash
     * candidates; the cosine scoring below stays live.
     */
-  private val embCandCache = new graft.PlanCache()
   private def embCandidates(spark: SparkSession, dir: String): DataFrame =
-    embCandCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Dedup.embCandidates")(
       embCandidatesPlan(spark, dir).localCheckpoint())
 
   /** The UNCHECKPOINTED candidate derivation (for plan-shape guards). */

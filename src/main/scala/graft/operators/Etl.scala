@@ -168,9 +168,8 @@ object Etl {
   /** The CSV book read back through `spark.read.csv` (permissive
     * mode, string-typed cells).
     */
-  private val rawBookCache = new graft.PlanCache()
   private def rawBookFile(spark: SparkSession, dir: String): DataFrame =
-      rawBookCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Etl.rawBookFile") {
     import spark.implicits._
     spark.read
       .schema("yr INT, flow STRING, mes STRING, val STRING, src_n BIGINT")
@@ -192,9 +191,8 @@ object Etl {
     * the hash compare. XlsxSpec additionally round-trips the writer/
     * parser directly.
     */
-  private val rawXlsxCache = new graft.PlanCache()
   private def rawBookXlsx(spark: SparkSession, dir: String): DataFrame =
-      rawXlsxCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Etl.rawBookXlsx") {
     import spark.implicits._
     graft.sources.Xlsx.readSheets(spark, s"${rawBookDir(spark, dir)}/book.xlsx")
       .filter($"row_num" > 1)
@@ -387,9 +385,8 @@ object Etl {
     * the content-identical cell-grid CSV twin, atomically under one
     * published dir; return the cell frame decoded FROM THE XLSX side.
     */
-  private val prodCache = new graft.PlanCache()
   private def prodCells(spark: SparkSession, dir: String): DataFrame =
-      prodCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Etl.prodCells") {
     import spark.implicits._
     // keyed by the ORDERS file's (path, size, mtime): the
     // lineitem/part inputs regenerate together with orders, so one

@@ -45,10 +45,8 @@ object Kpi {
   // queries read — the checkpointed ~#months-row frame is that
   // materialization, so each KPI pays the windows, not the fact scan.
 
-  private val baseMonthlyCache = new graft.PlanCache()
-
   private def baseMonthly(spark: SparkSession, dir: String): DataFrame =
-      baseMonthlyCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Kpi.baseMonthly") {
     import spark.implicits._
     Tables(spark, dir).orders
       .select(year($"o_orderdate").as("yr"), month($"o_orderdate").as("mon"),
@@ -289,10 +287,8 @@ object Kpi {
     * etl_products.py): category×yr×mon decimal-exact sums off the
     * lineitem⋈part join, cached per (session, dir) like base_monthly.
     */
-  private val catMonthlyCache = new graft.PlanCache()
-
   private def catMonthly(spark: SparkSession, dir: String): DataFrame =
-    catMonthlyCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Kpi.catMonthly")(
       catMonthlyPlan(spark, dir).localCheckpoint())
 
   /** The UNCHECKPOINTED grain derivation — carries the lineitem⋈part
@@ -753,9 +749,8 @@ object Kpi {
     * the fact-fact join input the bucketed zero-exchange layout
     * (SourcesSpec) exists for.
     */
-  private val orderTotalsCache = new graft.PlanCache()
   private def orderTotals(spark: SparkSession, dir: String): DataFrame =
-      orderTotalsCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Kpi.orderTotals") {
     import spark.implicits._
     Tables(spark, dir).lineitem
       .groupBy($"l_orderkey")

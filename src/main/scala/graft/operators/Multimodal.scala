@@ -227,15 +227,6 @@ object Multimodal {
   private[graft] def bandCols: Seq[String] =
     (0 until phashBits.toInt / phashBandBits).map(b => s"band$b")
 
-  /** Per-doc phash signatures + band keys, checkpointed and cached
-    * per (session, dir) — the 60-slice signature pass is the
-    * expensive half of the phash pipeline and the signatures are a
-    * deterministic corpus artifact like the minhash posting; mm_dedup
-    * self-joins this frame, so without the checkpoint the doc scan
-    * would run once per join side.
-    */
-  private val phashCache = new graft.PlanCache()
-
   /** The UNCHECKPOINTED signature derivation (for plan-shape guards). */
   private[graft] def phashDocsPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -243,8 +234,15 @@ object Multimodal {
       .select(($"doc_id" +: $"phash" +: bandCols.map(col)): _*)
   }
 
+  /** Per-doc phash signatures + band keys, checkpointed and cached
+    * per (session, dir) — the 60-slice signature pass is the
+    * expensive half of the phash pipeline and the signatures are a
+    * deterministic corpus artifact like the minhash posting; mm_dedup
+    * self-joins this frame, so without the checkpoint the doc scan
+    * would run once per join side.
+    */
   private def phashDocs(spark: SparkSession, dir: String): DataFrame =
-    phashCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Multimodal.phashDocs")(
       phashDocsPlan(spark, dir).localCheckpoint())
 
   private def mmPhash(spark: SparkSession, dir: String): DataFrame = {

@@ -86,9 +86,8 @@ object ReferenceParity {
     * per-book decode → measured checkpoint), shared by both parse
     * entries and the parity specs.
     */
-  private val refCellsCache = new graft.PlanCache()
   private[graft] def refCells(spark: SparkSession): DataFrame =
-    refCellsCache.getOrBuild(spark, refRoot) {
+    graft.Artifacts(spark, refRoot, "ReferenceParity.refCells") {
       graft.MeasuredCkpt(
         graft.sources.Xlsx.readAllCells(spark, Reference.path("data")))
     }

@@ -120,6 +120,20 @@ object Relational {
        |ORDER BY revenue DESC, l_orderkey
        |LIMIT 10""".stripMargin
 
+  /** The UNCHECKPOINTED dims derivation — carries the customer⋈
+    * nation⋈region joins the PlanSpec no-forced-broadcast guard
+    * asserts on (the cached form reduces to a checkpoint scan).
+    */
+  private[graft] def q4DimsPlan(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val t = Tables(spark, dir)
+    t.customer
+      .join(t.nation, $"c_nationkey" === $"n_nationkey")
+      .join(t.region.filter($"r_name" === "ASIA"),
+        $"n_regionkey" === $"r_regionkey")
+      .select($"c_custkey", $"n_name")
+  }
+
   /** q4: 5-way star join, revenue per nation for one region.
     * Reference: app.py joined country views.
     *
@@ -136,24 +150,8 @@ object Relational {
     * SF-proportional frame, never an OOM. Only orders⋈lineitem is
     * left to shuffle on the fact keys.
     */
-  private val q4DimsCache = new graft.PlanCache()
-
-  /** The UNCHECKPOINTED dims derivation — carries the customer⋈
-    * nation⋈region joins the PlanSpec no-forced-broadcast guard
-    * asserts on (the cached form reduces to a checkpoint scan).
-    */
-  private[graft] def q4DimsPlan(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val t = Tables(spark, dir)
-    t.customer
-      .join(t.nation, $"c_nationkey" === $"n_nationkey")
-      .join(t.region.filter($"r_name" === "ASIA"),
-        $"n_regionkey" === $"r_regionkey")
-      .select($"c_custkey", $"n_name")
-  }
-
   private def q4Dims(spark: SparkSession, dir: String): DataFrame =
-    q4DimsCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Relational.q4Dims")(
       graft.MeasuredCkpt(q4DimsPlan(spark, dir)))
 
   private def q4(spark: SparkSession, dir: String): DataFrame = {

@@ -106,15 +106,14 @@ object Similarity {
         "ann_ivfpq) or as a batch similarity join (ann_knn_graph).")
 
   /** Measured row counts per (session, corpus, tag) — one count job
-    * each, LRU-bounded (graft.LruCache). "queries" backs the
+    * each, kept in graft.Artifacts. "queries" backs the
     * probeSide contract check; "nodes"/"knn_edges" back the graph
     * partition sizing (graphParts). Counts are data properties, so a
     * racing duplicate build is benign.
     */
-  private val countCache = new graft.LruCache[(SparkSession, String, String), java.lang.Long](16)
   private def measuredCount(spark: SparkSession, dir: String, tag: String)(
       df: => DataFrame): Long =
-    countCache.getOrBuild((spark, dir, tag))(Long.box(df.count())).longValue()
+    graft.Artifacts(spark, dir, s"Similarity.measuredCount.$tag")(Long.box(df.count())).longValue()
 
   private def queryCount(spark: SparkSession, dir: String, q: => DataFrame): Long =
     measuredCount(spark, dir, "queries")(q)
@@ -168,9 +167,8 @@ object Similarity {
     * cost. The system under evaluation (the approx side) is NOT
     * cached — recall_eval re-runs it live.
     */
-  private val truthCache = new graft.PlanCache()
   private def bruteTruth(spark: SparkSession, dir: String): DataFrame =
-    truthCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Similarity.bruteTruth")(
       annBruteCore(spark, dir)
         .select(col("q_id"), col("neighbor_id"))
         .localCheckpoint())
@@ -218,9 +216,8 @@ object Similarity {
     * per vector) is index-build cost, not per-query cost. Shared by
     * every ANN variant and by dedup_embedding's candidate blocking.
     */
-  private val lshIndexCache = new graft.PlanCache()
   private[graft] def lshIndex(spark: SparkSession, dir: String): DataFrame =
-      lshIndexCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Similarity.lshIndex") {
     import spark.implicits._
     Tables(spark, dir).embeddings
       .select($"vec_id", $"label", $"embedding", norm($"embedding").as("nrm"),
@@ -328,9 +325,8 @@ object Similarity {
     * centroid aggregations are not part of a query's steady-state
     * cost. nlist rows, checkpointed.
     */
-  private val ivfCentroidCache = new graft.PlanCache()
   private def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
-      ivfCentroidCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Similarity.ivfCentroids") {
     import spark.implicits._
     // centroid component = exact mean per (label, dimension)
     val dims = Tables(spark, dir).embeddings
@@ -354,9 +350,8 @@ object Similarity {
     * pure repeated work. Queries × ivfProbeMax rows, checkpointed.
     */
   private[graft] val ivfProbeMax = 2
-  private val ivfProbedCache = new graft.PlanCache()
   private def ivfProbed(spark: SparkSession, dir: String): DataFrame =
-      ivfProbedCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Similarity.ivfProbed") {
     import spark.implicits._
     val q = lshIndex(spark, dir).filter(queryFilter(spark, dir)($"vec_id"))
       .select($"vec_id".as("q_id"), $"embedding".as("q_e"), $"nrm".as("q_n"))
@@ -456,10 +451,8 @@ object Similarity {
     * driver read of a deterministic projection, memoized like
     * queryCount. (vec_id, embedding as double, norm), sorted by id.
     */
-  private val kmeansSeedCache = new graft.LruCache[
-    (SparkSession, String), Array[(Long, Array[Double], Double)]](8)
   private def kmeansSeeds(spark: SparkSession, dir: String): Array[(Long, Array[Double], Double)] =
-      kmeansSeedCache.getOrBuild((spark, dir)) {
+      graft.Artifacts(spark, dir, "Similarity.kmeansSeeds") {
     import spark.implicits._
     Tables(spark, dir).embeddings
       .filter($"vec_id" % 50 === 0 && $"vec_id" < 400)
@@ -594,9 +587,8 @@ object Similarity {
     * AND by graph_pagerank's five iterations — cached per convention,
     * with the UNCHECKPOINTED *Plan variant for the shape guards.
     */
-  private val knnEdgeCache = new graft.PlanCache()
   private[graft] def knnEdges(spark: SparkSession, dir: String): DataFrame =
-    knnEdgeCache.getOrBuild(spark, dir)(
+    graft.Artifacts(spark, dir, "Similarity.knnEdges")(
       // MeasuredCkpt, not a plain checkpoint: the copied origin
       // estimate (a join product) is garbage-huge, and every graph
       // artifact downstream (undirected edges, pagerank prep) would
@@ -659,14 +651,13 @@ object Similarity {
 
   /** Semantic-CC labels cached per (session, corpus) — the iterative
     * star-contraction is index-build cost (like the LSH/IVF frames and
-    * dedup_clusters' ccCache twin, Dedup.scala), not per-invocation
+    * dedup_clusters' clusterLabels twin, Dedup.scala), not per-invocation
     * cost: a production SemDeDup sweep labels the corpus once and
     * every downstream selection consumes the labels. The cached frame
     * is localCheckpoint output, so eviction just drops the reference.
     */
-  private val semCcCache = new graft.PlanCache()
   private def semClusterLabels(spark: SparkSession, dir: String): DataFrame =
-      semCcCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Similarity.semClusterLabels") {
     import spark.implicits._
     val edges = knnEdges(spark, dir).filter($"cosine" >= semTau)
       .select(least($"vec_id", $"neighbor_id").as("a_id"),
@@ -891,21 +882,19 @@ object Similarity {
       .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
     val n = measuredCount(spark, dir, "nodes")(nodes)
     val parts = graphParts(spark, dir)
-    val nodesP = prNodesCache.getOrBuild(spark, dir)(prepNodes(nodes, parts))
-    val edgesW = prEdgesCache.getOrBuild(spark, dir)(prepEdges(edges, parts))
+    val nodesP = graft.Artifacts(spark, dir, "Similarity.prepNodes")(prepNodes(nodes, parts))
+    val edgesW = graft.Artifacts(spark, dir, "Similarity.prepEdges")(prepEdges(edges, parts))
     val rank0 = nodesP.select($"id", lit(prScale / n).as("r"))
     pagerankUpdate(nodesP, edgesW, rank0,
       ((prScale / prDampDen) * prBaseNum) / n)
   }
 
-  /** The prepared graph frames per (session, corpus) — index-build
-    * artifacts like lshIndex/ivfCentroids, cached (and clearAll-
-    * registered, so PlanSpec still asserts the full derivation) so
-    * steady-state reruns skip the materialization jobs.
+  /** The prepared graph frames per (session, corpus) are index-build
+    * artifacts like lshIndex/ivfCentroids, kept in graft.Artifacts
+    * (which Artifacts.clear empties, so PlanSpec still asserts the
+    * full derivation) so steady-state reruns skip the materialization
+    * jobs.
     */
-  private val prNodesCache = new graft.PlanCache()
-  private val prEdgesCache = new graft.PlanCache()
-
   private def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     def nodes = Tables(spark, dir).embeddings.select($"vec_id".as("id"))
@@ -915,8 +904,8 @@ object Similarity {
     // source of truth for the derivation, cached per corpus here
     val n = measuredCount(spark, dir, "nodes")(nodes)
     val parts = graphParts(spark, dir)
-    val nodesP = prNodesCache.getOrBuild(spark, dir)(prepNodes(nodes, parts))
-    val edgesW = prEdgesCache.getOrBuild(spark, dir)(prepEdges(edges, parts))
+    val nodesP = graft.Artifacts(spark, dir, "Similarity.prepNodes")(prepNodes(nodes, parts))
+    val edgesW = graft.Artifacts(spark, dir, "Similarity.prepEdges")(prepEdges(edges, parts))
     pagerankIter(nodesP, edgesW, n)
       .select($"id".as("vec_id"), $"r".as("pr"))
       .resultOrder($"vec_id")
@@ -974,7 +963,6 @@ object Similarity {
     * uncached form re-ran the distinct (scan + exchange + dedup
     * aggregate) per consumer.
     */
-  private val ueCache = new graft.PlanCache()
   private[graft] def undirectedEdgesPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     knnEdges(spark, dir)
@@ -983,7 +971,7 @@ object Similarity {
       .distinct()
   }
   private[graft] def undirectedEdges(spark: SparkSession, dir: String): DataFrame =
-    ueCache.getOrBuild(spark, dir) {
+    graft.Artifacts(spark, dir, "Similarity.undirectedEdges") {
       import spark.implicits._
       // measured partition sizing, like the pagerank prep frames: a
       // bench-scale edge set collapses to one partition and the whole
@@ -1088,9 +1076,8 @@ object Similarity {
     * per-query ADC tables, the probe-count check), and every rerun
     * re-consumed it from scratch before this cache.
     */
-  private val pqQuantCache = new graft.PlanCache()
   private def pqQuantized(spark: SparkSession, dir: String): DataFrame =
-      pqQuantCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Similarity.pqQuantized") {
     import spark.implicits._
     val emb = Tables(spark, dir).embeddings
     val amax = aggregate(
@@ -1136,9 +1123,8 @@ object Similarity {
     * into one int array (not pqSubspaces columns) because that is the
     * shape [[graft.functions.AdcSum]] scores against.
     */
-  private val pqCodesCache = new graft.PlanCache()
   private def pqCodes(spark: SparkSession, dir: String): DataFrame =
-      pqCodesCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Similarity.pqCodes") {
     import spark.implicits._
     val dists = pqDists(spark, dir)
     val packs = (0 until pqSubspaces).map(m =>
@@ -1155,9 +1141,8 @@ object Similarity {
     * al. §V), so the codes⋈labels join is index-build work, cached
     * per (session, corpus) like pqCodes itself.
     */
-  private val labeledCodesCache = new graft.PlanCache()
   private def labeledCodes(spark: SparkSession, dir: String): DataFrame =
-      labeledCodesCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "Similarity.labeledCodes") {
     import spark.implicits._
     pqCodes(spark, dir)
       .join(lshIndex(spark, dir).select($"vec_id", $"label"), "vec_id")

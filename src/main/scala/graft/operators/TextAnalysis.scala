@@ -214,9 +214,8 @@ object TextAnalysis {
     * elimination, so uncached the scan+TermCounts+explode ran twice
     * per action) and text_lm_score consumes the identical frame.
     */
-  private val tfPostingCache = new graft.PlanCache()
   private def tfPosting(spark: SparkSession, dir: String): DataFrame =
-      tfPostingCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "TextAnalysis.tfPosting") {
     import spark.implicits._
     Tables(spark, dir).documents
       .select($"doc_id",
@@ -237,9 +236,8 @@ object TextAnalysis {
     * vocab-sized aggregate (the audited aggregate-then-window
     * shape).
     */
-  private val vocabPostingCache = new graft.PlanCache()
   private def vocabPosting(spark: SparkSession, dir: String): DataFrame =
-      vocabPostingCache.getOrBuild(spark, dir) {
+      graft.Artifacts(spark, dir, "TextAnalysis.vocabPosting") {
     import spark.implicits._
     tfPosting(spark, dir)
       .groupBy($"t")

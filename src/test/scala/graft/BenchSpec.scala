@@ -27,9 +27,10 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("harness core: one record per query, a failure reads -1 and hides nothing") {
-    val real = Seq("q3_join_agg_topk", "q8_window_rank")
+    val real = Seq("q3_join_agg_topk", "q8_window_rank", "kpi_base_monthly")
     val boom: Bench.Query = (_, _) => throw new IllegalStateException("boom")
     val queries = real.map(n => n -> SparkEntry.queries(n)) :+ ("boom" -> boom)
+    Artifacts.clear() // the KPI query's warm-up must build its monthly grain
     val m = Bench.measure(spark, sf, queries, nPasses = 1)
     assert(m.records.map(_.query) == real :+ "boom")
     val failed = m.records.last
@@ -41,7 +42,9 @@ class BenchSpec extends AnyFunSuite {
       val direct = SparkEntry.queries(r.query)(spark, sf).queryExecution.executedPlan
         .collect { case e: ShuffleExchangeExec => e }.size
       assert(r.exchanges == direct, r)
+      assert(r.rebuilds == 0, r)
     }
+    assert(m.records(2).builds > 0, m.records(2))
     assert(m.records.exists(_.exchanges > 0), "the check needs a plan with an exchange")
     assert(m.floorSamples.size == 2 && m.floor > 0)
     assert(!org.apache.spark.ListenerProbe.listeners(spark.sparkContext)

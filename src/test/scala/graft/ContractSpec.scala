@@ -44,6 +44,14 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
+  test("a SPARK_GRAFT_CPUS that is not a positive integer fails fast and names itself") {
+    for (bad <- Seq("abc", "0", "-2", "+4", "", "4.5", "99999999999")) {
+      val e = intercept[IllegalArgumentException](GraftSession.builder(bad))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"), e)
+    }
+    GraftSession.builder("4") // builds no session
+  }
+
   test("measured relayout-width dial: core-count floor, growth, cap") {
     // floor = clamp(cores, 8, 256): below ~2 MB/file, scan-stage
     // parallelism EQUALS the file count (row-group granularity), and

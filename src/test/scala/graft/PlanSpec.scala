@@ -14,7 +14,7 @@ class PlanSpec extends AnyFunSuite {
     // cache left warm by an earlier suite would reduce the plan to a
     // checkpoint scan and make no-broadcast/no-cartesian guards pass
     // vacuously)
-    PlanCache.clearAll()
+    Artifacts.clear()
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
   }
 
@@ -33,7 +33,7 @@ class PlanSpec extends AnyFunSuite {
     }
     // ann_knn_graph serves the checkpointed edge index; the guard
     // runs against the UNCHECKPOINTED derivation
-    PlanCache.clearAll()
+    Artifacts.clear()
     val knn = graft.operators.Similarity.knnEdgesPlan(spark, sf)
       .queryExecution.executedPlan.toString
     assert("TopKPerKey \\[".r.findAllIn(knn).size >= 2, knn)
@@ -199,7 +199,7 @@ class PlanSpec extends AnyFunSuite {
       // (guarded by its own both-paths test above) — the unconditional-
       // hint sweep runs on its UNCHECKPOINTED dims derivation, which
       // carries the raw customer⋈nation⋈region joins
-      PlanCache.clearAll()
+      Artifacts.clear()
       val q4d = graft.operators.Relational.q4DimsPlan(spark, sf)
         .queryExecution.executedPlan.toString
       assert(!q4d.contains("BroadcastExchange"),
@@ -222,7 +222,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("dedup pair generation is equi-join, never cartesian") {
-    // the candidate/pair derivations live behind PlanCache +
+    // the candidate/pair derivations live behind Artifacts +
     // localCheckpoint, so the final query plans reduce them to
     // checkpoint scans — assert on the UNCHECKPOINTED builder plans
     // (the *Plan variants) as well as the live query halves
@@ -282,7 +282,7 @@ class PlanSpec extends AnyFunSuite {
     // over the pair stream is a second full exchange of a
     // band-multiplied relation, the exact shape mm_dedup measured as
     // the bigger half of its wall on a dense-dup corpus
-    PlanCache.clearAll()
+    Artifacts.clear()
     val p = graft.operators.Dedup.embCandidatesPlan(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("HashAggregate") && !p.contains("SortAggregate"),
@@ -300,7 +300,7 @@ class PlanSpec extends AnyFunSuite {
       // the served query reduces to a checkpoint scan of the cached
       // pair index — the property belongs to the UNCHECKPOINTED
       // verification builder
-      PlanCache.clearAll()
+      Artifacts.clear()
       val p = graft.operators.Dedup.minhashPairsPlan(spark, sf)
         .queryExecution.executedPlan.toString
       assert(!p.contains("BroadcastExchange"),
@@ -354,7 +354,7 @@ class PlanSpec extends AnyFunSuite {
       // UNCHECKPOINTED derivation, not the checkpoint scan the cached
       // query reduces to
       val knnP = {
-        PlanCache.clearAll()
+        Artifacts.clear()
         graft.operators.Similarity.knnEdgesPlan(spark, sf)
           .queryExecution.executedPlan.toString
       }
@@ -402,7 +402,7 @@ class PlanSpec extends AnyFunSuite {
     // HashAggregate on the narrow pair — the sketch buffers must not
     // ride the dedup exchange (the countDistinct-alongside shape
     // hauled one ObjectHashAggregate buffer per distinct customer)
-    PlanCache.clearAll()
+    Artifacts.clear()
     val d = graft.operators.Advanced.kmvPostingPlan(spark, sf)
       .queryExecution.executedPlan.toString
     assert("HashAggregate".r.findAllIn(d).size >= 2,
@@ -417,7 +417,7 @@ class PlanSpec extends AnyFunSuite {
       // mm_phash itself now serves from the checkpointed signature
       // cache (its live plan is a checkpoint scan) — the codegen
       // property belongs to the UNCHECKPOINTED builder plan
-      PlanCache.clearAll()
+      Artifacts.clear()
       val p = graft.operators.Multimodal.phashDocsPlan(spark, sf)
         .queryExecution.executedPlan.toString
       assert(p.toLowerCase.contains("bytesum"), "ByteSum not in plan")
@@ -460,7 +460,7 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set(graft.operators.Similarity.graphRowsPerPartConf, "1")
     try {
-      PlanCache.clearAll()
+      Artifacts.clear()
       val p = graft.operators.Similarity.pagerankIterPlan(spark, sf)
         .queryExecution.executedPlan.toString
       assert(!p.contains("CartesianProduct"),
@@ -486,7 +486,7 @@ class PlanSpec extends AnyFunSuite {
     // GraftSession and MeasuredCkpt's scaladoc). Asserted on the
     // UNCHECKPOINTED single-iteration builder — the executed loop's
     // final plan is just a checkpoint scan.
-    PlanCache.clearAll()
+    Artifacts.clear()
     val p = graft.operators.Similarity.pagerankIterPlan(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
@@ -572,7 +572,7 @@ class PlanSpec extends AnyFunSuite {
     // table, bounded by construction.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      PlanCache.clearAll()
+      Artifacts.clear()
       val p = graft.operators.Similarity.annIvfPqPlan(spark, sf)
         .queryExecution.executedPlan.toString
       assert(!p.contains("CartesianProduct"),

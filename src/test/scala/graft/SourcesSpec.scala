@@ -267,6 +267,27 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
       "stale writer deleted the fresh fixture")
   }
 
+  test("publishFixture evicts the fixtures whose source is gone, and only those") {
+    val root = tempDir("graft-fixture-orphan").toString
+    def publish(srcDir: java.nio.file.Path): String = {
+      Files.write(srcDir.resolve("orders.parquet"), srcDir.toString.getBytes)
+      graft.Tables.publishFixture(root, srcDir.toString, "orders.parquet") { tmp =>
+        Files.createDirectories(java.nio.file.Paths.get(tmp))
+        Files.write(java.nio.file.Paths.get(tmp, "data.txt"), "x".getBytes)
+      }
+    }
+    val (a, b, c) = (tempDir("graft-orphan-a"), tempDir("graft-orphan-b"), tempDir("graft-orphan-c"))
+    val outA = publish(a)
+    val outB = publish(b)
+    assert(Files.readString(java.nio.file.Paths.get(outA, "_source")) ==
+      a.resolve("orders.parquet").toAbsolutePath.toString)
+    TestSpark.deleteTree(a)
+    val outC = publish(c)
+    assert(!Files.exists(java.nio.file.Paths.get(outA)), "the orphan must be evicted")
+    assert(Files.exists(java.nio.file.Paths.get(outB, "data.txt")), "a live source's fixture evicted")
+    assert(Files.exists(java.nio.file.Paths.get(outC, "data.txt")))
+  }
+
   test("a params-fragment session's prod fixture is invisible to the oracle's src_n match") {
     // the DuckDB oracle selects its fixture by src_n = COUNT(orders)
     // over the PLAIN tables; a '#cat=...'-filtered session can share
