@@ -169,18 +169,13 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }.min
       GraftShim.drainListeners(sc)
-      // AQE's executedPlan is an empty AdaptiveSparkPlanExec shell
-      // until execution: census the non-adaptive plan (AQE is already
-      // off unless SPARK_GRAFT_CONF turns it on)
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val records = try queries.zipWithIndex.map { case ((name, fn), i) =>
+      val records = queries.zipWithIndex.map { case ((name, fn), i) =>
         val ok = passes.map(_(i)._1).filter(_ >= 0)
         val (jobs, stages, tasks) = counts.of(s"$nPasses:$name")
         val (ex, so, wi, ag) = census(spark, sfDir, name, fn, explain)
         Record(name, first(i)._1, if (ok.isEmpty) -1.0 else ok.min,
           jobs, stages, tasks, ex, so, wi, ag, first(i)._2, passes.last(i)._2)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      }
       Measured(records, floor, floorSamples.toSeq)
     } finally sc.removeSparkListener(counts)
   }
@@ -228,7 +223,6 @@ object Bench {
       s"SPARK_GRAFT_PASSES must be a positive integer (1-999), got '$passesRaw'")
     val nPasses = passesRaw.toInt
     val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
-    spark.sparkContext.setLogLevel("WARN")
     val m = measure(spark, sfDir, selected.toSeq, nPasses,
       explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
     // BENCH_SELF.json is one third of the committed (BENCH_SELF,

@@ -96,7 +96,6 @@ object Dashboard {
       viewType = args.lift(6),
       analysisType = args.lift(7))
     val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
-    spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     Files.writeString(Paths.get(s"$outDir/dashboard.md"),
       render(spark, sfDir, params))

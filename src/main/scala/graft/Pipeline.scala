@@ -55,7 +55,6 @@ object Pipeline {
     }
 
     val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
-    spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
 
     def stage(name: String, query: String): Unit = {
@@ -80,7 +79,7 @@ object Pipeline {
     TradeCatalog.publish(spark, sfDir)
     println(s"catalog published -> ${TradeCatalog.defaultRoot} (db ${TradeCatalog.db})")
     // 5) EDA + insights report (reference eda.py + insights_engine.py)
-    Report.main(Array(sfDir, s"$outDir/eda"))
+    Report.write(spark, sfDir, s"$outDir/eda")
 
     println(s"\npipeline complete -> $outDir")
     spark.stop()

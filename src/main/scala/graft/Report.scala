@@ -429,8 +429,13 @@ object Report {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("target/reports")
     val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
-    spark.sparkContext.setLogLevel("WARN")
+    try write(spark, sfDir, outDir) finally spark.stop()
+  }
 
+  /** Writes the EDA report of `sfDir` into `outDir` on the caller's
+    * session, which stays running.
+    */
+  def write(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
 
     val stats = q("kpi_quick_stats").first()
@@ -511,6 +516,5 @@ object Report {
       println(s"report written: $outDir/eda_summary.md (+2 SVG figures); " +
         s"reference checkout $refRoot not found (GRAFT_REFERENCE_DIR), " +
         "so its golden summary and 6 HTML figures were not rendered")
-    spark.stop()
   }
 }

@@ -14,7 +14,6 @@ object Verify {
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only).toMap
     val spark = GraftSession.local(GraftSession.defaultCpus, Some(sfDir))
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -22,7 +22,7 @@ final case class Q(
   */
 object GraftSession {
   /** `cpus` is the `local[n]` width, normally [[defaultCpus]]. */
-  def builder(cpus: String): SparkSession.Builder = {
+  private[graft] def builder(cpus: String): SparkSession.Builder = {
     require(cpus.matches("[0-9]+") && cpus.toIntOption.exists(_ > 0),
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus'")
     // Pin the JVM default locale before anything formats a number:
@@ -70,8 +70,7 @@ object GraftSession {
       // deployment should leave AQE ON (skew splits and size-based
       // join selection matter again at 100 TB) — that path configures
       // its own session (spark.sql.extensions=graft.GraftExtensions)
-      // and never goes through GraftSession.local; SPARK_GRAFT_CONF
-      // re-enables it here for A/Bs in one env var.
+      // and never goes through GraftSession.local.
       .config("spark.sql.adaptive.enabled", "false")
       // NOTE (measured, r9): the static planner re-shuffles a
       // SinglePartition child of a distribution-requiring operator
@@ -99,22 +98,6 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
   }
 
-  /** Dev A/B hook: SPARK_GRAFT_CONF="k=v;k=v" lands as session confs
-    * LAST (overriding the defaults above) so config experiments — AQE
-    * on/off, shuffle compression, partition counts — are one env var
-    * instead of a recompile. Unset in production/driver runs: the
-    * defaults are the tuned configuration.
-    */
-  private def withOverrides(b: SparkSession.Builder): SparkSession.Builder = {
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      }
-    b
-  }
-
   /** Measured shuffle-width dial: size `spark.sql.shuffle.partitions`
     * to the DATA, not the core count. Post-shuffle width is the wrong
     * place to buy parallelism on this suite — the compute-dense work
@@ -126,8 +109,7 @@ object GraftSession {
     * pure scheduling. This is the static-planner analog of the AQE
     * partition coalescing the CLUSTER path gets at runtime (AQE is ON
     * there — see the adaptive.enabled note above; this dial only
-    * touches GraftSession.local sessions and an explicit
-    * SPARK_GRAFT_CONF override still wins, applied last).
+    * touches GraftSession.local sessions).
     * Measured (r10, same host, sf0.1, 2-pass): 59.0 s at 32 parts vs
     * 44.9 s at 8 on a LOUDER window; probe floor 0.207 → 0.156
     * s/stage; only dedup_simhash (+0.06 s) regressed. Constants:
@@ -188,17 +170,18 @@ object GraftSession {
   def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
-  /** `dataDir`: the data directory the session will serve, for the
-    * measured shuffle-width dial — mains that take the dir as an
-    * argument (Verify) pass it; the rest inherit SPARK_GRAFT_SF_DIR.
+  /** The session every main and the test harness run on. `dataDir`:
+    * the data directory the session will serve, for the measured
+    * shuffle-width dial. Spark logs at WARN; a caller may lower it.
     */
   def local(cpus: String, dataDir: Option[String] = None): SparkSession = {
     val b = builder(cpus)
     for {
-      dir <- dataDir.orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
+      dir <- dataDir
       parts <- measuredShuffleParts(dir, cpus.toInt)
     } b.config("spark.sql.shuffle.partitions", parts.toString)
-    val s = withOverrides(b).getOrCreate()
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
     // WindowExec warns "No Partition Defined ... all the data to a
     // single partition" on EVERY unpartitioned window. All such sites
     // in this engine run over bounded aggregates (year×month series,
@@ -728,9 +711,11 @@ private[graft] final class Artifacts(bound: Int) {
 
 private[graft] object Artifacts {
   /** A full `graft.Bench` pass over one sf0.01 dir leaves 50 entries
-    * (10 table reads, 36 derivations, 4 measured counts); twice that
-    * lets two dirs interleave (a test JVM and its fixtures, a filtered
-    * and an unfiltered dashboard view) without evicting each other.
+    * (10 table reads, 35 derivations, 4 measured counts and the Etl
+    * source tag, built where the raw books are not yet published);
+    * twice that lets two dirs interleave (a test JVM and its fixtures,
+    * a filtered and an unfiltered dashboard view) without evicting
+    * each other.
     */
   private val Bound = 100
 

@@ -104,17 +104,18 @@ case class SumSquares(child: Expression) extends UnaryExpression {
 /** All `bands` banded LSH sign signatures of one embedding in a
   * single kernel: element b of the result packs `planes` bits, bit j
   * = sign of the strict left-to-right dot of the embedding with sign
-  * row b·planes+j of the embedded ±1 matrix.
+  * row b·planes+j of the embedded ±1 matrix. The one LSH signature
+  * kernel: VectorFunctions.lshSigAt is its one-band case.
   *
-  * Exists because the unrolled-`Column` formulation (lshSigAt per
-  * band, 8 × 512 terms inside one generator expression) exceeds
-  * janino's method-size limit — the stage failed codegen and ran
-  * interpreted. This kernel is a three-level primitive loop over a
-  * referenced int[][] — tiny generated code, same arithmetic:
-  * `acc += row[i] > 0 ? x : -x` accumulates in the identical order
-  * with the identical IEEE rounding as the unrolled `(±x0 + ±x1) +
-  * …` chain (0.0 + x == x bit-for-bit except a −0.0 ripple that
-  * only reaches the ≥ 0.0 comparison, where ±0.0 compare equal).
+  * A three-level primitive loop over a referenced int[][] rather
+  * than an unrolled-`Column` sum: 8 bands × 512 terms inside one
+  * generator expression exceed janino's method-size limit, and the
+  * stage then runs interpreted. Same arithmetic as the oracle's
+  * unrolled SQL (VectorFunctions.lshSigAtSql): `acc += row[i] > 0 ?
+  * x : -x` accumulates in the identical order with the identical
+  * IEEE rounding as the `(±x0 + ±x1) + …` chain (0.0 + x == x
+  * bit-for-bit except a −0.0 ripple that only reaches the ≥ 0.0
+  * comparison, where ±0.0 compare equal).
   */
 case class LshBandSigs(child: Expression, signs: Array[Array[Int]],
     planes: Int, bands: Int) extends UnaryExpression {

@@ -106,35 +106,17 @@ object VectorFunctions {
   }
 
   /** p-bit signature from sign-pool rows [off, off+p): bit j = sign
-    * of Σ_i e[i]·pm(off+j,i). The dot is an UNROLLED strict
-    * left-to-right sum of codegen'd double terms, so every
-    * intermediate rounding matches the oracle's identically unrolled
-    * expression (and it JITs instead of running interpreted lambdas).
+    * of Σ_i e[i]·pm(off+j,i) — one band of the [[LshBandSigs]] kernel,
+    * whose strict left-to-right dot matches [[lshSigAtSql]]'s
+    * unrolled sum bit for bit.
     */
   def lshSigAt(e: Column, planes: Int, off: Int): Column = {
     require(off + planes <= lshSignRows, s"sign pool exhausted: $off+$planes")
-    (0 until planes).map { j =>
-      val dot = (0 until lshDim).map { i =>
-        val x = element_at(e, i + 1).cast("double")
-        if (lshSigns(off + j)(i) > 0) x else -x
-      }.reduceLeft(_ + _)
-      when(dot >= 0.0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
+    element_at(column(LshBandSigs(expression(toD(e)),
+      lshSigns.slice(off, off + planes), planes, 1)), 1)
   }
 
   def lshSig(e: Column, planes: Int): Column = lshSigAt(e, planes, 0)
-
-  /** All `bands` banded signatures at once (array<long>, element b =
-    * lshSigAt(e, planes, b·planes)) via the native [[LshBandSigs]]
-    * kernel — the codegen-safe form of a per-band lshSigAt stack,
-    * which at 8 bands × 8 planes × 64 dims exceeds janino's method
-    * limit and silently de-compiles the whole stage.
-    */
-  def lshBandSigs(e: Column, planes: Int, bands: Int): Column = {
-    require(bands * planes <= lshSignRows, s"sign pool exhausted: $bands×$planes")
-    column(LshBandSigs(expression(toD(e)),
-      lshSigns.take(bands * planes), planes, bands))
-  }
 
   /** Banded signatures with a FIXED per-band sign-row stride: band b
     * uses pool rows [b·stride, b·stride+planes). With the stride

@@ -514,17 +514,7 @@ object CorpusSelect {
 
   /** The eval-slice Bloom filter: (w, word) with at most [[bloomWords]]
     * rows — bounded by construction, hence broadcastable at any SF.
-    * Cached per (session, corpus): a production decontamination gate
-    * builds the eval-set filter ONCE and probes every batch against
-    * it — the build aggregation is index cost, not per-query cost
-    * (same convention as lshIndex / the CC label caches).
     */
-  private[graft] def bloomFilter(spark: SparkSession, dir: String): DataFrame =
-      graft.Artifacts(spark, dir, "CorpusSelect.bloomFilter") {
-    bloomFilterPlan(spark, dir).localCheckpoint()
-  }
-
-  /** The UNCHECKPOINTED filter derivation (for the bounded-size spec). */
   private[graft] def bloomFilterPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Dedup.shinglePosting(spark, dir)
@@ -543,13 +533,16 @@ object CorpusSelect {
     * exactly how Spark's own bloom_filter_agg / might_contain pair
     * ships a filter to its probe side, and how a production gate
     * broadcasts its eval-set filter to every executor. The collect is
-    * of a bounded-by-construction frame (8 KB at any corpus size) and
-    * is cached per (session, corpus) alongside the frame form.
+    * of a bounded-by-construction frame (8 KB at any corpus size).
+    * Cached per (session, corpus): a production decontamination gate
+    * builds the eval-set filter ONCE and probes every batch against
+    * it — the build aggregation is index cost, not per-query cost
+    * (same convention as lshIndex / the CC label caches).
     */
   private[graft] def bloomFilterArray(spark: SparkSession, dir: String): Array[Long] =
       graft.Artifacts(spark, dir, "CorpusSelect.bloomFilterArray") {
     val arr = new Array[Long](bloomWords)
-    bloomFilter(spark, dir).collect()
+    bloomFilterPlan(spark, dir).collect()
       .foreach(r => arr(r.getLong(0).toInt) = r.getLong(1))
     arr
   }

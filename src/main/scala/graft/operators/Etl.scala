@@ -126,12 +126,14 @@ object Etl {
     * differ, so its rows carry a NEGATIVE tag instead — never equal
     * to a real fingerprint, so the oracle can never read a filtered
     * session's book (r11 ADVICE). The Spark side reads its own
-    * published dir by path, not by tag.
+    * published dir by path, not by tag. Kept in the artifact store:
+    * the raw book and the product books both stamp it.
     */
   private def sourceTag(spark: SparkSession, dir: String): Long =
-    if (graft.TradeParams.parseDir(dir)._2.isEmpty) Tables(spark, dir).orders
-      .agg(count(lit(1)) + coalesce(floor(Det.dsum(col("o_totalprice"))), lit(0L)))
-      .first().getLong(0)
+    if (graft.TradeParams.parseDir(dir)._2.isEmpty)
+      graft.Artifacts(spark, dir, "Etl.sourceTag")(Long.box(Tables(spark, dir).orders
+        .agg(count(lit(1)) + coalesce(floor(Det.dsum(col("o_totalprice"))), lit(0L)))
+        .first().getLong(0))).longValue()
     else -1L - math.abs(scala.util.hashing.MurmurHash3.stringHash(dir).toLong)
   private val sourceTagSql =
     s"""src_n = (SELECT COUNT(*) + CAST(COALESCE(FLOOR(${Det.dsumSql("o_totalprice")}), 0)

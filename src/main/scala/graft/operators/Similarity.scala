@@ -212,7 +212,7 @@ object Similarity {
     * lshPlanes-bit sign bucket (vec_id, label, embedding, nrm,
     * bucket) — cached per (session, corpus). This IS the LSH index: a
     * production deployment builds it once and serves probes against
-    * it, so the signature evaluation (lshPlanes × 64 unrolled terms
+    * it, so the signature evaluation (lshPlanes × 64 sign terms
     * per vector) is index-build cost, not per-query cost. Shared by
     * every ANN variant and by dedup_embedding's candidate blocking.
     */

@@ -209,47 +209,38 @@ object Streaming {
   // watermark-bounded state (StreamingSpec proves stream pairs ==
   // batch pairs); the rank-1 pick is the batch reduction on top.
 
-  private def attribution(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = Tables(spark, dir).events
+  /** Each purchase's most recent click within the preceding hour
+    * (rank 1 by click_ts, click_id descending), over the interval
+    * join of `joinType`.
+    */
+  private def lastClick(events: DataFrame, joinType: String): DataFrame = {
     val pairs = graft.streaming.EventsStream.clickPurchasePairs(
-      e.filter($"event_type" === "purchase"),
-      e.filter($"event_type" === "click"))
-    val w = Window.partitionBy($"purchase_id")
-      .orderBy($"click_ts".desc, $"click_id".desc)
-    pairs.withColumn("rk", row_number().over(w)).filter($"rk" === 1)
-      .select($"purchase_id", $"user_id", $"purchase_ts",
-        $"click_id", $"click_ts",
+      events.filter(col("event_type") === "purchase"),
+      events.filter(col("event_type") === "click"), joinType)
+    val w = Window.partitionBy(col("purchase_id"))
+      .orderBy(col("click_ts").desc, col("click_id").desc)
+    pairs.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
+        col("click_id"), col("click_ts"),
         expr("(unix_micros(purchase_ts) - unix_micros(click_ts)) div 1000000")
           .as("gap_s"))
-      .resultOrder($"purchase_id")
   }
 
+  private def attribution(spark: SparkSession, dir: String): DataFrame =
+    lastClick(Tables(spark, dir).events, "inner").resultOrder(col("purchase_id"))
+
   /** Last-click attribution with ORGANIC conversions kept: the
-    * left-outer interval join (EventsStream.clickPurchasePairsOuter)
-    * gives every purchase either its clicks or one null click row, so
-    * the rank-1 pick yields exactly one row per purchase with an
-    * `attributed` flag. Null-safety of the rank: a partition is
-    * either all non-null clicks or the single null row, so the
-    * click_ts DESC ordering never compares null against non-null —
-    * the cross-engine null-ordering trap cannot bite.
+    * left-outer interval join gives every purchase either its clicks
+    * or one null click row, so the rank-1 pick yields exactly one row
+    * per purchase with an `attributed` flag. Null-safety of the rank:
+    * a partition is either all non-null clicks or the single null
+    * row, so the click_ts DESC ordering never compares null against
+    * non-null — the cross-engine null-ordering trap cannot bite.
     */
-  private def attributionOuter(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = Tables(spark, dir).events
-    val pairs = graft.streaming.EventsStream.clickPurchasePairsOuter(
-      e.filter($"event_type" === "purchase"),
-      e.filter($"event_type" === "click"))
-    val w = Window.partitionBy($"purchase_id")
-      .orderBy($"click_ts".desc, $"click_id".desc)
-    pairs.withColumn("rk", row_number().over(w)).filter($"rk" === 1)
-      .select($"purchase_id", $"user_id", $"purchase_ts",
-        $"click_id", $"click_ts",
-        expr("(unix_micros(purchase_ts) - unix_micros(click_ts)) div 1000000")
-          .as("gap_s"),
-        $"click_id".isNotNull.as("attributed"))
-      .resultOrder($"purchase_id")
-  }
+  private def attributionOuter(spark: SparkSession, dir: String): DataFrame =
+    lastClick(Tables(spark, dir).events, "left_outer")
+      .withColumn("attributed", col("click_id").isNotNull)
+      .resultOrder(col("purchase_id"))
 
   private val attributionOuterSql =
     """WITH p AS (

@@ -97,35 +97,25 @@ object EventsStream {
 
   // ---- click→purchase attribution (stream-stream interval join) ----
 
-  /** All (purchase, click) pairs where the click is by the same user
+  /** The (purchase, click) pairs where the click is by the same user
     * within the hour before the purchase — the join core shared by
-    * the batch attribution query and the stream-stream spec. In
+    * the batch attribution queries and the stream-stream specs. In
     * streaming, the time-interval condition plus watermarks bound
     * the join state: clicks older than purchase-watermark − 1h are
     * dropped.
-    */
-  def clickPurchasePairs(purchases: DataFrame, clicks: DataFrame): DataFrame = {
-    val p = purchases.select(col("event_id").as("purchase_id"),
-      col("user_id"), col("ts").as("purchase_ts"))
-    val c = clicks.select(col("event_id").as("click_id"),
-      col("user_id").as("c_user"), col("ts").as("click_ts"))
-    p.join(c, col("user_id") === col("c_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR"))
-      .drop("c_user")
-  }
-
-  /** LEFT-OUTER form of the attribution join: EVERY purchase, with
-    * its matching clicks or one all-null click row — the organic
-    * (unattributed) conversions a marketing funnel must keep, which
-    * the inner form silently drops. In streaming this is the
+    *
+    * `joinType` "inner" keeps attributed purchases only;
+    * "left_outer" keeps EVERY purchase, with its matching clicks or
+    * one all-null click row — the organic (unattributed) conversions
+    * a marketing funnel must keep. In streaming the outer form is the
     * watermark-driven outer join: an unmatched purchase emits only
     * once the click-side watermark passes its interval (state
     * eviction proves no matching click can still arrive), so the
     * nulls are late by one watermark delay but never wrong. Same
-    * state bound as the inner form.
+    * state bound either way.
     */
-  def clickPurchasePairsOuter(purchases: DataFrame, clicks: DataFrame): DataFrame = {
+  def clickPurchasePairs(purchases: DataFrame, clicks: DataFrame,
+      joinType: String): DataFrame = {
     val p = purchases.select(col("event_id").as("purchase_id"),
       col("user_id"), col("ts").as("purchase_ts"))
     val c = clicks.select(col("event_id").as("click_id"),
@@ -133,7 +123,7 @@ object EventsStream {
     p.join(c, col("user_id") === col("c_user") &&
         col("click_ts") <= col("purchase_ts") &&
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR"),
-        "left_outer")
+        joinType)
       .drop("c_user")
   }
 

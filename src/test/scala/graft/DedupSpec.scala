@@ -409,7 +409,7 @@ class DedupSpec extends AnyFunSuite with TempDirs {
   }
 
   test("the bloom filter table is bounded by its word count at any SF") {
-    val filt = graft.operators.CorpusSelect.bloomFilter(spark, sf)
+    val filt = graft.operators.CorpusSelect.bloomFilterPlan(spark, sf)
     assert(filt.count() <= 1024)
     // every word index in range, every word non-zero
     filt.collect().foreach { r =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tests/test_products_qa.py: insight narrative structure and data
   * quality/consistency invariants over the trade analog.
   */
-class InsightsSpec extends AnyFunSuite {
+class InsightsSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -76,6 +76,17 @@ class InsightsSpec extends AnyFunSuite {
     // degenerate inputs must not divide by zero
     parse(graft.Report.lineSvg("flat", Seq(2.0, 2.0)))
     parse(graft.Report.barSvg("zero", Seq("a"), Seq(0.0)))
+  }
+
+  test("Report.write writes the summary and both figures and leaves the session running") {
+    val out = tempDir("graft-report")
+    graft.Report.write(spark, sf, out.toString)
+    Seq("eda_summary.md", "eda_trend.svg", "eda_seasonality.svg").foreach { f =>
+      val p = out.resolve(f)
+      assert(java.nio.file.Files.isRegularFile(p) && java.nio.file.Files.size(p) > 0,
+        s"$f not written")
+    }
+    assert(!spark.sparkContext.isStopped, "Report.write stopped the caller's session")
   }
 
   test("SVG renderers are locale-independent (decimal-comma default locale)") {

@@ -175,7 +175,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val s = EventsStream.readStreamEvents(spark, sf)
     val streamPairs = EventsStream.clickPurchasePairs(
       s.filter($"event_type" === "purchase").withWatermark("ts", "2 hours"),
-      s.filter($"event_type" === "click").withWatermark("ts", "2 hours"))
+      s.filter($"event_type" === "click").withWatermark("ts", "2 hours"), "inner")
     val q = streamPairs
       .select($"purchase_id", $"click_id")
       .writeStream.format("memory").queryName("attr_pairs")
@@ -187,7 +187,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       val e = Tables(spark, sf).events
       val want = EventsStream.clickPurchasePairs(
           e.filter($"event_type" === "purchase"),
-          e.filter($"event_type" === "click"))
+          e.filter($"event_type" === "click"), "inner")
         .select($"purchase_id", $"click_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(want.nonEmpty, "batch join produced no pairs")
@@ -212,9 +212,9 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventsStream.Event]
     val events = mem.toDS().toDF()
-    val pairs = EventsStream.clickPurchasePairsOuter(
+    val pairs = EventsStream.clickPurchasePairs(
       events.filter($"event_type" === "purchase").withWatermark("ts", "2 hours"),
-      events.filter($"event_type" === "click").withWatermark("ts", "2 hours"))
+      events.filter($"event_type" === "click").withWatermark("ts", "2 hours"), "left_outer")
     val q = pairs.select($"purchase_id", $"click_id")
       .writeStream.format("memory").queryName("attr_outer")
       .outputMode("append").start()
@@ -240,9 +240,9 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       val got = spark.table("attr_outer").collect().map(key)
         .filter(_._1 >= 0).toSet
       val e = Tables(spark, sf).events
-      val want = EventsStream.clickPurchasePairsOuter(
+      val want = EventsStream.clickPurchasePairs(
           e.filter($"event_type" === "purchase"),
-          e.filter($"event_type" === "click"))
+          e.filter($"event_type" === "click"), "left_outer")
         .select($"purchase_id", $"click_id").collect().map(key).toSet
       assert(want.exists(_._2.isEmpty), "fixture has no organic purchases — spec vacuous")
       assert(got == want,
@@ -288,9 +288,9 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
         .schema(implicitly[org.apache.spark.sql.Encoder[EventsStream.Event]].schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
-      val pairs = EventsStream.clickPurchasePairsOuter(
+      val pairs = EventsStream.clickPurchasePairs(
         events.filter($"event_type" === "purchase").withWatermark("ts", "2 hours"),
-        events.filter($"event_type" === "click").withWatermark("ts", "2 hours"))
+        events.filter($"event_type" === "click").withWatermark("ts", "2 hours"), "left_outer")
       pairs.select($"purchase_id", $"click_id")
         .writeStream
         .outputMode("append")
@@ -333,9 +333,9 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
       s"${emitted.length - emitted.distinct.length} rows re-emitted across restart")
     val got = emitted.filter(_._1 >= 0).toSet
     val e = Tables(spark, sf).events
-    val want = EventsStream.clickPurchasePairsOuter(
+    val want = EventsStream.clickPurchasePairs(
         e.filter($"event_type" === "purchase"),
-        e.filter($"event_type" === "click"))
+        e.filter($"event_type" === "click"), "left_outer")
       .select($"purchase_id", $"click_id").collect().map(key).toSet
     assert(want.exists(_._2.isEmpty), "fixture has no organic purchases — spec vacuous")
     assert(got == want,

@@ -8,13 +8,8 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
   * test wall-clock otherwise).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.builder("4").appName("graft-test").getOrCreate()
-    GraftExtensions.install(s) // same surface GraftSession.local ships
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
   val sf: String = "/root/testdata/sf0.001"
+  lazy val spark: SparkSession = GraftSession.local("4", Some(sf))
 
   /** Restore the GraftSession-local AQE default after a test pinned
     * it: `spark.conf.unset` reverts to Spark's BUILT-IN default

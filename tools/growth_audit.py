@@ -18,7 +18,6 @@ import json, sys
 PAIRS = [
     ("sf0.1", "BENCH_SELF.json", "BASELINE_DUCKDB.json"),
     ("sf1", "BENCH_SF1.json", "BASELINE_DUCKDB_SF1.json"),
-    ("sf10", "BENCH_SF10.json", "BASELINE_DUCKDB_SF10.json"),
 ]
 
 def qmap(path):

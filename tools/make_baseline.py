@@ -212,60 +212,6 @@ measured decade early. Largest sf1 head-to-heads: """
       + ", ".join(f"{q} {dq1[q]:.1f}s vs {sq1[q]:.1f}s"
                   for q in sorted(c1, key=lambda q: -dq1[q])[:5]) + ".\n")
 
-    # ---- second scaling decade: the sf10 pair (r14) ----
-    # Same manual protocol as sf1 (nested under the sf1 branch because
-    # the decade table needs the sf1 numbers). The DuckDB side's pass
-    # protocol is whatever its artifact's "mode" records — at sf10 a
-    # full DuckDB pass is hours, so the honest protocol there is
-    # --no-warmup after the crosscheck run has warmed the page cache.
-    sf10_spark_p = f"{ROOT}/BENCH_SF10.json"
-    sf10_duck_p = f"{ROOT}/BASELINE_DUCKDB_SF10.json"
-    if os.path.exists(sf10_spark_p) and os.path.exists(sf10_duck_p):
-        s10 = json.load(open(sf10_spark_p)); d10 = json.load(open(sf10_duck_p))
-        sq10, dq10 = s10["queries"], d10["queries"]
-        c10 = sorted(set(sq10) & set(dq10))
-        if d10.get("failed"):
-            sys.exit(f"sf10 DuckDB side has failures: {d10['failed']}")
-        if any(v < 0 for v in sq10.values()):
-            sys.exit("sf10 Spark side has failed queries: "
-                     + ", ".join(q for q, v in sorted(sq10.items()) if v < 0))
-        st10 = sum(sq10[q] for q in c10); dt10 = sum(dq10[q] for q in c10)
-        h10 = [q for q in c10 if dq10[q] >= HEAVY_CUT]
-        l10 = [q for q in c10 if dq10[q] < HEAVY_CUT]
-        sh10, dh10 = sum(sq10[q] for q in h10), sum(dq10[q] for q in h10)
-        sl10, dl10 = sum(sq10[q] for q in l10), sum(dq10[q] for q in l10)
-        w(f"""
-## Scaling point: sf10 (100× the bench SF — the second measured decade)
-
-Same tiling construction at 100× (60M-row lineitem, 500k documents,
-200k embeddings), same host. Spark side: graft.Bench steady-state,
-{s10.get("mode")}. DuckDB side: {d10.get("mode")} — disclosed because a
-full warm-up pass at this SF costs hours; the crosscheck run that
-precedes it is the cache warmer. Correctness at this SF is
-`CROSSCHECK_SF10.json` (oracle) and `CROSSCHECK_SF10_AQE.json`
-(cluster-profile). Artifacts: `BENCH_SF10.json`,
-`BASELINE_DUCKDB_SF10.json`.
-
-| | DuckDB 32t | Spark local[32] | ratio |
-| --- | --- | --- | --- |
-| total, all {len(c10)} oracled queries | {dt10:.1f} s | {st10:.1f} s | **{ratio(st10, dt10)}** |
-| {len(h10)} data-heavy queries (DuckDB ≥ {HEAVY_CUT}) | {dh10:.1f} s | {sh10:.1f} s | **{ratio(sh10, dh10)}** |
-| {len(l10)} floor-bound queries (DuckDB < {HEAVY_CUT}) | {dl10:.1f} s | {sl10:.1f} s | {ratio(sl10, dl10)} |
-
-Two measured decades (total suite wall):
-
-| engine | sf0.1 | sf1 | sf10 | sf0.1→sf1 | sf1→sf10 |
-| --- | --- | --- | --- | --- | --- |
-| Spark local[32] | {s_tot:.1f} s | {st1:.1f} s | {st10:.1f} s | {st1 / s_tot:.1f}× | {st10 / st1:.1f}× |
-| DuckDB 32t | {d_tot:.1f} s | {dt1:.1f} s | {dt10:.1f} s | {dt1 / d_tot:.1f}× | {dt10 / dt1:.1f}× |
-
-Per-query growth across the three points: `tools/growth_audit.py`
-(reads these four artifacts plus the sf0.1 pair). Largest sf10
-head-to-heads: """
-          + ", ".join(f"{q} {dq10[q]:.1f}s vs {sq10[q]:.1f}s"
-                      for q in sorted(c10, key=lambda q: -dq10[q])[:5])
-          + ".\n")
-
 # refuse to WRITE from a noisy pair: BASELINE.md must only ever
 # describe an accepted pair (the gate in bench_pair.sh also rejects,
 # but this assertion holds for direct invocations too)
