@@ -4,7 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLongArray
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, SortExec}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.{FormattedMode, SortExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -14,8 +15,8 @@ import org.apache.spark.sql.execution.window.WindowExec
   * SPARK_GRAFT_PASSES measured passes, and records per query the
   * warm-up time, the min of the measured passes, the jobs, stages and
   * tasks of the last measured pass, the operator census of its
-  * physical plan, and the [[Artifacts]] builds of the warm-up run and
-  * of the last measured pass.
+  * physical plan, the [[Artifacts]] builds of the warm-up run and of
+  * the last measured pass, and the code generation of the warm-up run.
   *
   * Knobs (environment): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_ONLY (comma-separated subset), SPARK_GRAFT_PASSES,
@@ -35,18 +36,26 @@ object Bench {
   /** One query's record; -1 marks what failed (a run, or the plan).
     * `builds` counts the artifacts its warm-up run built, `rebuilds`
     * those its last measured pass built again: anything but 0 there
-    * is an artifact the store failed to hold.
+    * is an artifact the store failed to hold. `compiles` and
+    * `codegenMs` are the janino compiles of its warm-up run and their
+    * time in ms (JVM-wide counters; queries run one at a time).
     */
   final case class Record(query: String, firstS: Double, minS: Double,
       jobs: Long, stages: Long, tasks: Long,
       exchanges: Int, sorts: Int, windows: Int, aggregates: Int,
-      builds: Long, rebuilds: Long) {
+      builds: Long, rebuilds: Long, compiles: Long, codegenMs: Double) {
     def json: String =
       s"""{"query":"$query","first_s":${ms(firstS)},"min_s":${ms(minS)},""" +
         s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
         s""""exchanges":$exchanges,"sorts":$sorts,"windows":$windows,"aggregates":$aggregates,""" +
-        s""""builds":$builds,"rebuilds":$rebuilds}"""
+        s""""builds":$builds,"rebuilds":$rebuilds,""" +
+        s""""compiles":$compiles,"codegen_ms":${ms(codegenMs)}}"""
   }
+
+  /** One timed run: seconds (-1 if it failed), [[Artifacts]] builds,
+    * janino compiles and their nanoseconds.
+    */
+  private final case class Run(s: Double, builds: Long, compiles: Long, codegenNs: Long)
 
   /** A record per query plus the floor probes bracketing the passes. */
   final case class Measured(records: Seq[Record], floor: Double, floorSamples: Seq[Double])
@@ -139,10 +148,11 @@ object Bench {
     val counts = new JobCounts
     sc.addSparkListener(counts)
     try {
-      // (seconds, Artifacts builds) of one run
-      def timed(pass: Int, name: String, fn: Query): (Double, Long) = {
+      def timed(pass: Int, name: String, fn: Query): Run = {
         sc.setJobGroup(s"$pass:$name", name, interruptOnCancel = false)
         val b0 = Artifacts.builds
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val g0 = WholeStageCodegenExec.codeGenTime
         val t = try {
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -152,7 +162,8 @@ object Bench {
           System.err.println(s"[bench] $what: ${e.getMessage}")
           -1.0
         } finally sc.clearJobGroup()
-        (t, Artifacts.builds - b0)
+        Run(t, Artifacts.builds - b0, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+          WholeStageCodegenExec.codeGenTime - g0)
       }
       val first = queries.map { case (name, fn) => timed(0, name, fn) }
       val floorSamples = scala.collection.mutable.ArrayBuffer(stageFloorProbe(spark))
@@ -170,11 +181,12 @@ object Bench {
       }.min
       GraftShim.drainListeners(sc)
       val records = queries.zipWithIndex.map { case ((name, fn), i) =>
-        val ok = passes.map(_(i)._1).filter(_ >= 0)
+        val ok = passes.map(_(i).s).filter(_ >= 0)
         val (jobs, stages, tasks) = counts.of(s"$nPasses:$name")
         val (ex, so, wi, ag) = census(spark, sfDir, name, fn, explain)
-        Record(name, first(i)._1, if (ok.isEmpty) -1.0 else ok.min,
-          jobs, stages, tasks, ex, so, wi, ag, first(i)._2, passes.last(i)._2)
+        Record(name, first(i).s, if (ok.isEmpty) -1.0 else ok.min,
+          jobs, stages, tasks, ex, so, wi, ag, first(i).builds, passes.last(i).builds,
+          first(i).compiles, first(i).codegenNs / 1e6)
       }
       Measured(records, floor, floorSamples.toSeq)
     } finally sc.removeSparkListener(counts)

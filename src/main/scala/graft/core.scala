@@ -95,6 +95,21 @@ object GraftSession {
       // SinglePartition because graphParts grows the partition count
       // with the measured row count.
       .config("spark.sql.maxSinglePartitionBytes", Long.MaxValue.toString)
+      // NOTE (measured, 4-vCPU host, cold `adhoc` pass): with ICU case
+      // mappings on (Spark 4.1's default), the JVM's first lower()/
+      // upper() initialises CollationAwareUTF8String, whose static
+      // initialiser title-cases every Unicode code point through ICU
+      // on one task thread while the other cores wait: 87 of 694
+      // executor-thread samples in a JFR profile of the pass, and
+      // llm_pii_scrub (the pass's only lower()) 1.53 s with ICU
+      // against 0.20 s without, in a traced pair. Off, lower()/upper()
+      // on UTF8_BINARY run UTF8String.toLowerCase/toUpperCase — the
+      // methods the Canonicalize kernels use — so kernel and regex
+      // forms agree on every code point (ICU lowercases U+A7C0 and
+      // U+1C89, the JDK's tables and DuckDB keep them; ASCII is
+      // unaffected). A cluster session must set the same conf for
+      // that parity.
+      .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.ui.enabled", "false")
   }
 

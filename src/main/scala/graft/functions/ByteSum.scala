@@ -6,14 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Sum of a string's byte values — the accumulation primitive behind
-  * the multimodal average-hash (mm_phash): slice brightness vs
-  * global brightness, in exact integer arithmetic so the DuckDB
-  * oracle reproduces it bit-for-bit (no float means, no rounding).
+/** Sum of a string's byte values — the brightness primitive of the
+  * multimodal features (mm_video_scene frames, mm_audio_window DC
+  * offsets), in exact integer arithmetic so the DuckDB oracle
+  * reproduces it bit-for-bit (no float means, no rounding).
   *
   * Like [[RollingHash]] it is a native Catalyst `Expression` with
-  * `doGenCode`: the byte loop fuses into whole-stage codegen, so
-  * hashing 48 slices of a payload stays one generated function with
+  * `doGenCode`: the byte loop fuses into whole-stage codegen with
   * zero boxing — the property a per-payload feature extractor needs
   * when the payload column is the bulk of a 100 TB scan.
   */

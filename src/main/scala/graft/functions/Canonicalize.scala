@@ -20,9 +20,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * other graft kernels (RollingHash pattern; fallback-disabled
   * compile spec).
   *
-  * Both kernels lowercase via [[UTF8String.toLowerCase]] — the exact
-  * method Spark's `lower()` runs for the default UTF8_BINARY
-  * collation (CollationSupport.Lower.execBinary) — so the
+  * Both kernels lowercase via [[UTF8String.toLowerCase]]. Spark's
+  * `lower()` on the default UTF8_BINARY collation runs that method
+  * (CollationSupport.Lower.execBinary) only with
+  * `spark.sql.icu.caseMappings.enabled=false`, which
+  * [[graft.GraftSession]] pins; Spark 4.1's default runs
+  * `execBinaryICU` instead, which lowercases a few code points the
+  * JDK keeps (U+A7C0, U+1C89). On a session with the pin the
   * composition matches the regex form on any input, not just ASCII.
   */
 object Canonicalize extends Serializable {

@@ -178,8 +178,8 @@ object Multimodal {
   // The decode boundary is the same stub as above: a real deployment
   // computes slice sums from decoded pixel rows; everything from the
   // bit-packing down (band keys, the dedup join in MultimodalSpec) is
-  // deployment-real. Row-local, one whole-stage-codegen pass (ByteSum
-  // is a native codegen Expression), zero shuffle.
+  // deployment-real. Row-local, one whole-stage-codegen pass (the
+  // AverageHash kernel walks each payload once), zero shuffle.
 
   // 60-bit signature in 4 × 15-bit lanes (r14; was 48/12): the widest
   // layout whose bits and lane keys all stay strictly positive in a
@@ -194,29 +194,11 @@ object Multimodal {
     * the spec can run the planted-pair band join on a synthetic frame.
     */
   private[graft] def withPhash(df: DataFrame): DataFrame = {
-    import graft.functions.ByteSum.byte_sum
-    // slice j spans bytes ((j·n) div B, ((j+1)·n) div B]; operands are
-    // non-negative and ≪ 2^53, so double-division + trunc-cast equals
-    // the integer floor-div the oracle's // computes
-    def fl(c: org.apache.spark.sql.Column) = (c.cast("double") / phashBits).cast(LongType)
-    // j is a build-time constant (the bit position), so the 60 slice
-    // tests unroll into one flat codegen expression — no per-row loop
-    // bookkeeping, and each bit's weight 2^j is a literal
-    val phash = (0 until phashBits.toInt).map { j =>
-      val st = fl(lit(j.toLong) * col("_n"))
-      val en = fl(lit(j + 1L) * col("_n"))
-      val sliceSum = byte_sum(col("text").substr(
-        (st + 1L).cast("int"), (en - st).cast("int")))
-      when(sliceSum * col("_n") > col("_total") * (en - st), lit(1L << j))
-        .otherwise(0L)
-    }.reduce(_ + _)
     val bands = (0 until (phashBits.toInt / phashBandBits)).map(b =>
       (shiftright(col("phash"), b * phashBandBits) % (1L << phashBandBits))
         .as(s"band$b"))
-    df.withColumn("_n", length(col("text")).cast(LongType))
-      .withColumn("_total", byte_sum(col("text")))
-      .withColumn("phash", phash)
-      .drop("_n", "_total")
+    df.withColumn("phash",
+        graft.functions.AverageHash.average_hash(col("text"), phashBits.toInt))
       .select(col("*") +: bands: _*)
   }
 
@@ -290,8 +272,8 @@ object Multimodal {
   // nearest-neighbor sampling — pixel i of the output is source byte
   // (i·n) div T, the standard NN resampling index map. Sampling
   // positions are static per row (T is a build-time constant), so the
-  // 16 substrings unroll into one flat codegen projection like
-  // mm_phash's slices: row-local, zero shuffle, and the thumbnail
+  // 16 substrings unroll into one flat codegen projection: row-local,
+  // zero shuffle, and the thumbnail
   // fingerprint (rolling hash of the sampled bytes) is the
   // cheap-to-compare key a dedup-by-thumbnail pass would join on. A
   // real deployment swaps byte sampling for decoded-pixel sampling

@@ -50,4 +50,17 @@ class BenchSpec extends AnyFunSuite {
     assert(!org.apache.spark.ListenerProbe.listeners(spark.sparkContext)
       .exists(_.isInstanceOf[Bench.JobCounts]), "the counting listener must be removed")
   }
+
+  test("the warm-up record counts the janino compiles of its run") {
+    // generated classes are cached JVM-wide by source text, and earlier
+    // suites may have compiled this query's plan already: a literal no
+    // other plan carries makes its output stage new source
+    val salt = System.nanoTime()
+    val q: Bench.Query = (s, dir) => SparkEntry.queries("q3_join_agg_topk")(s, dir)
+      .withColumn("salt", org.apache.spark.sql.functions.lit(salt))
+    val r = Bench.measure(spark, sf, Seq("q3_join_agg_topk" -> q), nPasses = 1).records.head
+    assert(r.minS > 0, r)
+    assert(r.compiles > 0 && r.codegenMs > 0, r)
+    assert(r.json.endsWith(s""","compiles":${r.compiles},"codegen_ms":${Bench.ms(r.codegenMs)}}"""))
+  }
 }

@@ -103,6 +103,48 @@ class MultimodalSpec extends AnyFunSuite {
     assert(hamming(h1, h3) > 8, s"unrelated payloads too close: ${hamming(h1, h3)}")
   }
 
+  test("average_hash equals its driver-side twin and the unrolled substr form, under codegen") {
+    def quad(k: Int) = (0 until k).map(i => ('a' + (i * i * 7 + i * 3) % 26).toChar).mkString
+    val base = quad(400)
+    val multi = (0 until 150)
+      .map(i => Seq("a", "é", "✓", "𝄞", "z", "ß", "Ꟁ")((i * i * 7 + i * 3) % 7)).mkString
+    // phash as the unrolled 60-term substr + byte_sum tree computed it
+    // on these inputs, taken once before the kernel replaced it
+    val cases: Seq[(Option[String], Long)] = Seq(
+      Some("") -> 0L,
+      Some(quad(1)) -> 0L,
+      Some(quad(59)) -> 219014267020907568L,
+      Some(quad(60)) -> 406780997230348890L,
+      Some(quad(61)) -> 406780997230348890L,
+      Some(base) -> 723578168309716309L,
+      Some("z" * 8 + base.substring(8)) -> 723578168309716311L,
+      Some(multi) -> 813864200743342811L,
+      None -> 0L)
+    // an RDD source keeps the projection out of local-relation folding,
+    // so the generated code is what runs
+    val df = spark.sparkContext
+      .parallelize(cases.zipWithIndex.map { case ((t, _), i) => (i.toLong, t) }, 2)
+      .toDF("doc_id", "text")
+    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val q = Multimodal.withPhash(df).select($"doc_id", $"phash")
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l => l.contains("average_hash") && l.contains("*(")),
+        s"average_hash not in a codegen'd projection:\n$plan")
+      val got = q.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      cases.zipWithIndex.foreach { case ((t, want), i) =>
+        assert(got(i.toLong) == want, s"case $i")
+        t.foreach(s => assert(graft.functions.AverageHash.hashOf(s, 60) == want, s"twin, case $i"))
+      }
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
+        case None => spark.conf.unset("spark.sql.codegen.fallback")
+      }
+    }
+  }
+
   test("mm_resize matches the nearest-neighbor index map recomputed locally") {
     val got = SparkEntry.queries("mm_resize")(spark, sf).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap

@@ -411,7 +411,7 @@ class PlanSpec extends AnyFunSuite {
       s"sketch buffers must not ride the dedup exchange:\n$d")
   }
 
-  test("byte_sum participates in whole-stage codegen (mm_phash stays one pass)") {
+  test("average_hash participates in whole-stage codegen (mm_phash stays one pass)") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // mm_phash itself now serves from the checkpointed signature
@@ -420,8 +420,8 @@ class PlanSpec extends AnyFunSuite {
       Artifacts.clear()
       val p = graft.operators.Multimodal.phashDocsPlan(spark, sf)
         .queryExecution.executedPlan.toString
-      assert(p.toLowerCase.contains("bytesum"), "ByteSum not in plan")
-      val projLine = p.linesIterator.find(_.toLowerCase.contains("bytesum")).get
+      assert(p.contains("average_hash"), "AverageHash not in plan")
+      val projLine = p.linesIterator.find(_.contains("average_hash")).get
       assert(projLine.contains("*("), s"projection not codegen'd: $projLine")
       // row-local feature extraction: no join, no aggregate exchange —
       // the only exchanges allowed are the scan repartition and the

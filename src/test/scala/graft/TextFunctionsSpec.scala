@@ -126,6 +126,27 @@ class TextFunctionsSpec extends AnyFunSuite {
         graft.operators.Dedup.canonicalUrlRegex($"u").as("r"))
         .collect()
         .foreach(r => assert(r.getString(0) == r.getString(1)))
+      // code points ICU case-maps and the JDK's tables keep (U+A7C0,
+      // U+1C89 and their lowercase partners): lower()/upper() must run
+      // UTF8String's mapping, the one the kernels use. An RDD source
+      // keeps the projection out of local-relation folding, so the
+      // generated code is what runs.
+      val rare = Seq("Ꟁ", "ꟁ", "Ᲊ", "ᲊ")
+      val odd = rare.flatMap(c => Seq(s"Old $c Polish", s"${c}x$c Y",
+        s"https://www.$c.Example.com/${c}A/?ref=1&page=2"))
+      spark.sparkContext.parallelize(odd, 2).toDF("s")
+        .select(
+          graft.operators.Dedup.canonical($"s"), graft.operators.Dedup.canonicalRegex($"s"),
+          graft.operators.Dedup.canonicalUrl($"s"), graft.operators.Dedup.canonicalUrlRegex($"s"),
+          lower($"s"), upper($"s"), $"s")
+        .collect()
+        .foreach { r =>
+          val s = org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(6))
+          assert(r.getString(0) == r.getString(1), s"canonical_text: $s")
+          assert(r.getString(2) == r.getString(3), s"canonical_url: $s")
+          assert(r.getString(4) == s.toLowerCase.toString, s"lower: $s")
+          assert(r.getString(5) == s.toUpperCase.toString, s"upper: $s")
+        }
       // SQL surface: registered by GraftExtensions like the other kernels
       assert(spark.sql("SELECT canonical_text(' A,b  C! ') AS c").first()
         .getString(0) == "ab c")
