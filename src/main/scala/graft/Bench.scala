@@ -5,10 +5,13 @@ import java.util.concurrent.atomic.AtomicLongArray
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.execution.{FormattedMode, SortExec, WholeStageCodegenExec}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate, Complete, Final}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The measurement main: runs SparkEntry queries against
   * SPARK_GRAFT_SF_DIR through a noop sink, one warm-up pass then
@@ -16,7 +19,8 @@ import org.apache.spark.sql.execution.window.WindowExec
   * warm-up time, the min of the measured passes, the jobs, stages and
   * tasks of the last measured pass, the operator census of its
   * physical plan, the [[Artifacts]] builds of the warm-up run and of
-  * the last measured pass, and the code generation of the warm-up run.
+  * the last measured pass, and the code generation and runtime bloom
+  * filters of the warm-up run.
   *
   * Knobs (environment): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_ONLY (comma-separated subset), SPARK_GRAFT_PASSES,
@@ -36,26 +40,31 @@ object Bench {
   /** One query's record; -1 marks what failed (a run, or the plan).
     * `builds` counts the artifacts its warm-up run built, `rebuilds`
     * those its last measured pass built again: anything but 0 there
-    * is an artifact the store failed to hold. `compiles` and
+    * is an artifact the store failed to hold. `runtimeFilters` counts
+    * the `bloom_filter_agg` subqueries of every execution of its
+    * warm-up run, artifact checkpoints included. `compiles` and
     * `codegenMs` are the janino compiles of its warm-up run and their
     * time in ms (JVM-wide counters; queries run one at a time).
     */
   final case class Record(query: String, firstS: Double, minS: Double,
       jobs: Long, stages: Long, tasks: Long,
       exchanges: Int, sorts: Int, windows: Int, aggregates: Int,
-      builds: Long, rebuilds: Long, compiles: Long, codegenMs: Double) {
+      builds: Long, rebuilds: Long, runtimeFilters: Long,
+      compiles: Long, codegenMs: Double) {
     def json: String =
       s"""{"query":"$query","first_s":${ms(firstS)},"min_s":${ms(minS)},""" +
         s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
         s""""exchanges":$exchanges,"sorts":$sorts,"windows":$windows,"aggregates":$aggregates,""" +
-        s""""builds":$builds,"rebuilds":$rebuilds,""" +
+        s""""builds":$builds,"rebuilds":$rebuilds,"runtime_filters":$runtimeFilters,""" +
         s""""compiles":$compiles,"codegen_ms":${ms(codegenMs)}}"""
   }
 
   /** One timed run: seconds (-1 if it failed), [[Artifacts]] builds,
-    * janino compiles and their nanoseconds.
+    * runtime bloom filters (counted on the warm-up run only), janino
+    * compiles and their nanoseconds.
     */
-  private final case class Run(s: Double, builds: Long, compiles: Long, codegenNs: Long)
+  private final case class Run(s: Double, builds: Long, filters: Long, compiles: Long,
+      codegenNs: Long)
 
   /** A record per query plus the floor probes bracketing the passes. */
   final case class Measured(records: Seq[Record], floor: Double, floorSamples: Seq[Double])
@@ -80,6 +89,29 @@ object Bench {
       Option(stageGroup.get(e.stageId)).foreach(bump(_, 2))
     def of(group: String): (Long, Long, Long) =
       Option(byGroup.get(group)).map(c => (c.get(0), c.get(1), c.get(2))).getOrElse((0L, 0L, 0L))
+  }
+
+  /** Runtime bloom filters planned by InjectRuntimeFilter: the final
+    * `bloom_filter_agg` aggregates of a physical plan and of its
+    * subqueries.
+    */
+  private[graft] object RuntimeFilters extends AdaptiveSparkPlanHelper {
+    def in(plan: SparkPlan): Int = collectWithSubqueries(plan) {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+          (e.mode == Final || e.mode == Complete) &&
+            e.aggregateFunction.isInstanceOf[BloomFilterAggregate]) => a
+    }.size
+  }
+
+  /** Runtime bloom filters of every execution the session finishes. */
+  private final class FilterCounts extends QueryExecutionListener {
+    private val n = new java.util.concurrent.atomic.AtomicLong
+    def count: Long = n.get
+    private def add(qe: QueryExecution): Unit =
+      try n.addAndGet(RuntimeFilters.in(qe.executedPlan)) catch { case _: Exception => () }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = add(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      add(qe)
   }
 
   /** Per-STAGE floor probe: one session-width exchange (the measured
@@ -140,19 +172,23 @@ object Bench {
     *
     * Each run carries the job group `<pass>:<query>`, set before and
     * cleared after its timed window; the listener bus is drained
+    * after each warm-up run, before its runtime filters are read, and
     * before the counts of the last pass are read.
     */
   def measure(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
       nPasses: Int, explain: Boolean = false): Measured = {
     val sc = spark.sparkContext
     val counts = new JobCounts
+    val filters = new FilterCounts
     sc.addSparkListener(counts)
+    spark.listenerManager.register(filters)
     try {
       def timed(pass: Int, name: String, fn: Query): Run = {
         sc.setJobGroup(s"$pass:$name", name, interruptOnCancel = false)
         val b0 = Artifacts.builds
         val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val g0 = WholeStageCodegenExec.codeGenTime
+        val f0 = filters.count
         val t = try {
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -162,7 +198,9 @@ object Bench {
           System.err.println(s"[bench] $what: ${e.getMessage}")
           -1.0
         } finally sc.clearJobGroup()
-        Run(t, Artifacts.builds - b0, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+        if (pass == 0) GraftShim.drainListeners(sc)
+        Run(t, Artifacts.builds - b0, filters.count - f0,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
           WholeStageCodegenExec.codeGenTime - g0)
       }
       val first = queries.map { case (name, fn) => timed(0, name, fn) }
@@ -186,10 +224,13 @@ object Bench {
         val (ex, so, wi, ag) = census(spark, sfDir, name, fn, explain)
         Record(name, first(i).s, if (ok.isEmpty) -1.0 else ok.min,
           jobs, stages, tasks, ex, so, wi, ag, first(i).builds, passes.last(i).builds,
-          first(i).compiles, first(i).codegenNs / 1e6)
+          first(i).filters, first(i).compiles, first(i).codegenNs / 1e6)
       }
       Measured(records, floor, floorSamples.toSeq)
-    } finally sc.removeSparkListener(counts)
+    } finally {
+      sc.removeSparkListener(counts)
+      spark.listenerManager.unregister(filters)
+    }
   }
 
   /** The printed summary line. The gate floor is the WORST bracketing

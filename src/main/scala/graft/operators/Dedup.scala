@@ -638,11 +638,16 @@ object Dedup {
     * in at least one band, checkpointed and cached per (session, dir):
     * the signature/band/self-join stages are the expensive half of the
     * minhash pipeline, and their result is a deterministic corpus
-    * artifact like the posting itself.
+    * artifact like the posting itself. MeasuredCkpt, not a plain
+    * checkpoint: a plain one keeps the band self-join's estimate
+    * (3.4 TiB for 38 rows), on which InjectRuntimeFilter puts a
+    * bloom_filter_agg subquery (a job of its own) on the posting
+    * self-join of [[minhashPairsPlan]], and the two join sides no
+    * longer share exchanges.
     */
   private[graft] def minhashCandidates(spark: SparkSession, dir: String): DataFrame =
     graft.Artifacts(spark, dir, "Dedup.minhashCandidates")(
-      minhashCandidatesPlan(spark, dir).localCheckpoint())
+      graft.MeasuredCkpt(minhashCandidatesPlan(spark, dir)))
 
   /** The UNCHECKPOINTED candidate derivation — the plan the shape
     * guards assert on (the cached form reduces to a checkpoint scan).

@@ -51,6 +51,33 @@ class BenchSpec extends AnyFunSuite {
       .exists(_.isInstanceOf[Bench.JobCounts]), "the counting listener must be removed")
   }
 
+  test("the warm-up record counts runtime bloom filters; dedup_minhash_lsh plans none") {
+    // control: a shuffled join whose creation side is a selective scan
+    // filter gets a bloom_filter_agg subquery once the application-side
+    // size bound is lifted
+    import org.apache.spark.sql.functions.col
+    val control: Bench.Query = (s, dir) => {
+      val t = Tables(s, dir)
+      t.lineitem.join(t.orders.filter(col("o_orderpriority") === "1-URGENT"),
+        col("l_orderkey") === col("o_orderkey"))
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    val c = try Bench.measure(spark, sf, Seq("control" -> control), nPasses = 1).records.head
+    finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
+    }
+    assert(c.minS > 0 && c.runtimeFilters > 0, c)
+    // every artifact built cold, so the checkpoint executions are counted too
+    Artifacts.clear()
+    val r = Bench.measure(spark, sf,
+      Seq("dedup_minhash_lsh" -> SparkEntry.queries("dedup_minhash_lsh")), nPasses = 1).records.head
+    assert(r.minS > 0 && r.builds > 0, r)
+    assert(r.runtimeFilters == 0, r)
+    assert(r.json.contains(s""","runtime_filters":0,"""), r.json)
+  }
+
   test("the warm-up record counts the janino compiles of its run") {
     // generated classes are cached JVM-wide by source text, and earlier
     // suites may have compiled this query's plan already: a literal no

@@ -52,6 +52,23 @@ class ContractSpec extends AnyFunSuite {
     GraftSession.builder("4") // builds no session
   }
 
+  test("local sessions and their newSession() run tasks without artifact isolation") {
+    // a Dataset job: its tasks run inside a SQL execution, the scope in
+    // which Spark applies a session's isolated artifact class loader
+    def taskLoaders(s: org.apache.spark.sql.SparkSession): Set[String] = {
+      import s.implicits._
+      s.range(0, 8, 1, 4)
+        .map((_: java.lang.Long) => Thread.currentThread.getContextClassLoader.getClass.getName)
+        .collect().toSet
+    }
+    for (s <- Seq(TestSpark.spark, TestSpark.spark.newSession())) {
+      val loaders = taskLoaders(s)
+      assert(loaders.nonEmpty &&
+        !loaders.contains("org.apache.spark.executor.ExecutorClassLoader"), loaders)
+      assert(s.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    }
+  }
+
   test("measured relayout-width dial: core-count floor, growth, cap") {
     // floor = clamp(cores, 8, 256): below ~2 MB/file, scan-stage
     // parallelism EQUALS the file count (row-group granularity), and

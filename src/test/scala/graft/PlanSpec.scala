@@ -311,6 +311,18 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("minhash verification plans no runtime bloom filter") {
+    // at default thresholds: the candidate checkpoint carries measured
+    // statistics, so InjectRuntimeFilter has no join-product estimate
+    // to put a bloom_filter_agg subquery (its own job) on the posting
+    // self-join
+    Artifacts.clear()
+    val qe = graft.operators.Dedup.minhashPairsPlan(spark, sf).queryExecution
+    val p = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(!p.contains("might_contain") && !p.contains("bloom_filter_agg"), p)
+    assert(Bench.RuntimeFilters.in(qe.executedPlan) == 0)
+  }
+
   test("ann_bruteforce broadcasts the query side only") {
     val p = plan("ann_bruteforce")
     assert(p.contains("BroadcastExchange"))
