@@ -17,10 +17,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * SPARK_GRAFT_SF_DIR through a noop sink, one warm-up pass then
   * SPARK_GRAFT_PASSES measured passes, and records per query the
   * warm-up time, the min of the measured passes, the jobs, stages and
-  * tasks of the last measured pass, the operator census of its
-  * physical plan, the [[Artifacts]] builds of the warm-up run and of
-  * the last measured pass, and the code generation and runtime bloom
-  * filters of the warm-up run.
+  * tasks of the last measured pass and of the warm-up run, the
+  * operator census of its physical plan, the [[Artifacts]] builds of
+  * the warm-up run and of the last measured pass, and the code
+  * generation and runtime bloom filters of the warm-up run.
   *
   * Knobs (environment): SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_ONLY (comma-separated subset), SPARK_GRAFT_PASSES,
@@ -38,9 +38,11 @@ object Bench {
   type Query = (SparkSession, String) => DataFrame
 
   /** One query's record; -1 marks what failed (a run, or the plan).
-    * `builds` counts the artifacts its warm-up run built, `rebuilds`
-    * those its last measured pass built again: anything but 0 there
-    * is an artifact the store failed to hold. `runtimeFilters` counts
+    * `firstJobs`, `firstStages` and `firstTasks` count the warm-up
+    * run, eager artifact builds included. `builds` counts the
+    * artifacts its warm-up run built, `rebuilds` those its last
+    * measured pass built again: anything but 0 there is an artifact
+    * the store failed to hold. `runtimeFilters` counts
     * the `bloom_filter_agg` subqueries of every execution of its
     * warm-up run, artifact checkpoints included. `compiles` and
     * `codegenMs` are the janino compiles of its warm-up run and their
@@ -48,12 +50,14 @@ object Bench {
     */
   final case class Record(query: String, firstS: Double, minS: Double,
       jobs: Long, stages: Long, tasks: Long,
+      firstJobs: Long, firstStages: Long, firstTasks: Long,
       exchanges: Int, sorts: Int, windows: Int, aggregates: Int,
       builds: Long, rebuilds: Long, runtimeFilters: Long,
       compiles: Long, codegenMs: Double) {
     def json: String =
       s"""{"query":"$query","first_s":${ms(firstS)},"min_s":${ms(minS)},""" +
         s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+        s""""first_jobs":$firstJobs,"first_stages":$firstStages,"first_tasks":$firstTasks,""" +
         s""""exchanges":$exchanges,"sorts":$sorts,"windows":$windows,"aggregates":$aggregates,""" +
         s""""builds":$builds,"rebuilds":$rebuilds,"runtime_filters":$runtimeFilters,""" +
         s""""compiles":$compiles,"codegen_ms":${ms(codegenMs)}}"""
@@ -221,9 +225,11 @@ object Bench {
       val records = queries.zipWithIndex.map { case ((name, fn), i) =>
         val ok = passes.map(_(i).s).filter(_ >= 0)
         val (jobs, stages, tasks) = counts.of(s"$nPasses:$name")
+        val (fJobs, fStages, fTasks) = counts.of(s"0:$name")
         val (ex, so, wi, ag) = census(spark, sfDir, name, fn, explain)
         Record(name, first(i).s, if (ok.isEmpty) -1.0 else ok.min,
-          jobs, stages, tasks, ex, so, wi, ag, first(i).builds, passes.last(i).builds,
+          jobs, stages, tasks, fJobs, fStages, fTasks, ex, so, wi, ag,
+          first(i).builds, passes.last(i).builds,
           first(i).filters, first(i).compiles, first(i).codegenNs / 1e6)
       }
       Measured(records, floor, floorSamples.toSeq)

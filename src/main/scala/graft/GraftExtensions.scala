@@ -1,24 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.{ByteEnergy, ByteSum, DotProduct, RollingHash, SumSquares}
 import graft.plans.{SetOpToFlagAggregate, TopKStrategy}
 
-/** Registration of the engine's custom pieces.
-  *
-  * Cluster deployment path (applies at session build time):
+/** The engine's custom planner pieces, applied when a session is
+  * built: the TopKPerKey strategy, the set-op flag-aggregate rule
+  * (in the operator-optimization batches) and the SQL functions in
+  * [[GraftExtensions.functions]]. Local sessions get them from
+  * [[GraftSession]]'s builder; a cluster names the same class:
   * ```
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * ```
-  * Live-session path (e.g. notebooks, tests):
-  * ```
-  * GraftExtensions.install(spark)
-  * ```
-  * Either way, SQL users get `rolling_hash`, `dot_product`,
-  * `sum_squares`, and the planner gets the TopKPerKey strategy.
+  * Sessions made by `newSession()` carry them too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -56,45 +53,15 @@ object GraftExtensions {
       graft.functions.CanonicalUrl(exprs.head))
   )
 
-  // install()'s functionExists idempotency check consults the SESSION
-  // registry, which is pre-populated with every Spark built-in — a
-  // kernel named like a built-in would silently never register and
-  // SQL would run the built-in with different semantics. Fail at
-  // class-load instead of at first wrong query.
+  // injectFunction registers over whatever the session's registry
+  // holds, so a kernel named like a Spark built-in would silently
+  // replace the built-in for every SQL user of the session. Fail at
+  // class-load instead of at the first wrong query.
   {
     val builtin = org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
     val clashes = functions.map(_._1)
       .filter(n => builtin.functionExists(FunctionIdentifier(n)))
     require(clashes.isEmpty,
       s"graft kernel name(s) collide with Spark built-ins: ${clashes.mkString(",")}")
-  }
-
-  /** Register on an already-running session. */
-  def install(spark: SparkSession): Unit = {
-    // the strategy install's synchronized check-then-append lives in
-    // ONE place (TopKStrategy.installOn), shared with the lazy
-    // TopKPerKey.apply path
-    TopKStrategy.installOn(spark)
-    // live sessions have no optimizer-injection hook; the experimental
-    // extraOptimizations batch runs after the standard batches, where
-    // the rule matches the lowered Distinct(semi/anti join) shapes
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(SetOpToFlagAggregate)) {
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ SetOpToFlagAggregate
-      }
-    }
-    // idempotent like the strategy/rule installs above: a session that
-    // already has the functions (a prior install, or the
-    // spark.sql.extensions path) is left alone — re-registering logs a
-    // "replaced a previously registered function" warning per function
-    // per session, which pollutes the bench log tail the driver parses
-    functions.foreach { case (name, builder) =>
-      if (!spark.sessionState.functionRegistry
-          .functionExists(FunctionIdentifier(name))) {
-        spark.sessionState.functionRegistry
-          .createOrReplaceTempFunction(name, builder, "built-in")
-      }
-    }
   }
 }

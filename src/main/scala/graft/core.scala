@@ -69,8 +69,9 @@ object GraftSession {
       // skew/size uncertainty for AQE to re-plan around. A CLUSTER
       // deployment should leave AQE ON (skew splits and size-based
       // join selection matter again at 100 TB) — that path configures
-      // its own session (spark.sql.extensions=graft.GraftExtensions)
-      // and never goes through GraftSession.local.
+      // its own session, naming the class this builder applies
+      // (spark.sql.extensions=graft.GraftExtensions), and never goes
+      // through GraftSession.local.
       .config("spark.sql.adaptive.enabled", "false")
       // NOTE (measured, r9): the static planner re-shuffles a
       // SinglePartition child of a distribution-requiring operator
@@ -127,6 +128,11 @@ object GraftSession {
       // Connect) keeps isolation on.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // the engine's custom surface (TopKPerKey strategy, set-op
+      // flag-aggregate rule, SQL functions) is part of every session
+      // and of every newSession() made from it; a cluster names the
+      // same class in spark.sql.extensions
+      .withExtensions(new GraftExtensions)
   }
 
   /** Measured shuffle-width dial: size `spark.sql.shuffle.partitions`
@@ -227,11 +233,6 @@ object GraftSession {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // the engine's custom surface (TopKPerKey strategy, the set-op
-    // flag-aggregate rule, SQL-exposed native expressions) is part of
-    // every session, not an opt-in: cluster deployments get it via
-    // --conf spark.sql.extensions=graft.GraftExtensions
-    GraftExtensions.install(s)
     s
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import graft.{Det, Q, Tables}
 import graft.Out._
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -481,56 +481,72 @@ object Etl {
     s.substring(i, j)
   }
 
-  private[graft] def parseBookCells(grid: DataFrame): DataFrame = {
+  /** A sheet's sparse grid: row → (col → val). */
+  private type SheetGrid = scala.collection.Map[Int, scala.collection.Map[Int, String]]
+
+  /** The per-sheet pass both book parsers run: year sheets only, one
+    * typed group per (book, sheet), and `parse` over the book name,
+    * the sheet name and the sheet's sparse grid — bounded by the
+    * sheet's calendar × category (or country) grid whatever the lake
+    * size.
+    */
+  private def perYearSheet[T: Encoder](grid: DataFrame)(
+      parse: (String, String, SheetGrid) => Iterator[T]): Dataset[T] = {
     val spark = grid.sparkSession
     import spark.implicits._
-    val mesOrTotal = (meses :+ "Total").toSet
-    grid.filter($"sheet".rlike("^[0-9]{4}$")) // year sheets only (:31-32)
+    grid.filter($"sheet".rlike("^[0-9]{4}$"))
       .select($"book", $"sheet", $"row_num", $"col_num", $"val")
       .as[(String, String, Int, Int, String)]
       .groupByKey { case (b, s, _, _, _) => (b, s) }
       .flatMapGroups { (key: (String, String),
           it: Iterator[(String, String, Int, Int, String)]) =>
-        val (book, sheet) = key
-        // the sheet's sparse grid: row → (col → val); bounded by the
-        // sheet's calendar × category grid whatever the lake size
         val rows = scala.collection.mutable.Map
           .empty[Int, scala.collection.mutable.Map[Int, String]]
         it.foreach { case (_, _, r, c, v) =>
           rows.getOrElseUpdate(r, scala.collection.mutable.Map.empty) += c -> v
         }
-        val year = sheet.toInt
-        val flow = if (book.contains("F1")) "import" else "export"
-        // header row = MIN row with a cell whose trimmed text is
-        // 'Enero' (:38-44) — min over matching cells ≡ the relational
-        // MIN(row_num) aggregate
-        val headIdx = rows.iterator
-          .filter(_._2.values.exists(v => v != null && strim(v) == "Enero"))
-          .map(_._1).minOption
-        headIdx.iterator.flatMap { h =>
-          // month cols (:46-52): header-row cells in MONTHS+Total
-          val colmap = rows(h).iterator.collect {
-            case (c, v) if v != null && mesOrTotal(strim(v)) => (c, strim(v))
-          }.toSeq
-          // category rows (:58-74): col 2 at/below head+3, metadata
-          // filtered — same predicates as the relational form
-          // (length ≥ 3, not incluye%/total%, not nan/none)
-          val cats = rows.iterator.collect {
-            case (r, cs) if r >= h + 3 && cs.contains(2) && cs(2) != null =>
-              (r, strim(cs(2)))
-          }.filter { case (_, cat) =>
-            val lc = cat.toLowerCase
-            cat.length >= 3 && !lc.startsWith("incluye") &&
-              !lc.startsWith("total") && lc != "nan" && lc != "none"
-          }
-          for {
-            (r, category) <- cats
-            row = rows(r)
-            (c, month) <- colmap.iterator
-            raw <- row.get(c)
-          } yield (year, month, flow, category, raw)
-        }
+        parse(key._1, key._2, rows)
       }
+  }
+
+  private[graft] def parseBookCells(grid: DataFrame): DataFrame = {
+    val spark = grid.sparkSession
+    import spark.implicits._
+    val mesOrTotal = (meses :+ "Total").toSet
+    // year sheets only (:31-32)
+    perYearSheet(grid) { (book, sheet, rows) =>
+      val year = sheet.toInt
+      val flow = if (book.contains("F1")) "import" else "export"
+      // header row = MIN row with a cell whose trimmed text is
+      // 'Enero' (:38-44) — min over matching cells ≡ the relational
+      // MIN(row_num) aggregate
+      val headIdx = rows.iterator
+        .filter(_._2.values.exists(v => v != null && strim(v) == "Enero"))
+        .map(_._1).minOption
+      headIdx.iterator.flatMap { h =>
+        // month cols (:46-52): header-row cells in MONTHS+Total
+        val colmap = rows(h).iterator.collect {
+          case (c, v) if v != null && mesOrTotal(strim(v)) => (c, strim(v))
+        }.toSeq
+        // category rows (:58-74): col 2 at/below head+3, metadata
+        // filtered — same predicates as the relational form
+        // (length ≥ 3, not incluye%/total%, not nan/none)
+        val cats = rows.iterator.collect {
+          case (r, cs) if r >= h + 3 && cs.contains(2) && cs(2) != null =>
+            (r, strim(cs(2)))
+        }.filter { case (_, cat) =>
+          val lc = cat.toLowerCase
+          cat.length >= 3 && !lc.startsWith("incluye") &&
+            !lc.startsWith("total") && lc != "nan" && lc != "none"
+        }
+        for {
+          (r, category) <- cats
+          row = rows(r)
+          (c, month) <- colmap.iterator
+          raw <- row.get(c)
+        } yield (year, month, flow, category, raw)
+      }
+    }
       .toDF("year", "month", "flow", "category", "raw")
       .select($"year", $"month", $"flow", $"category",
         expr("TRY_CAST(raw AS DOUBLE)").as("usd")) // float() (:79-84)
@@ -591,54 +607,41 @@ object Etl {
     def tryDouble(s: String): Option[Double] =
       try Some(java.lang.Double.parseDouble(s.trim))
       catch { case _: NumberFormatException => None }
-    grid.filter($"sheet".rlike("^[0-9]{4}$"))
-      .select($"book", $"sheet", $"row_num", $"col_num", $"val")
-      .as[(String, String, Int, Int, String)]
-      .groupByKey { case (b, s, _, _, _) => (b, s) }
-      .flatMapGroups { (key: (String, String),
-          it: Iterator[(String, String, Int, Int, String)]) =>
-        val (book, sheet) = key
-        // the sheet's sparse grid: row → (col → val); bounded by the
-        // sheet's calendar × country grid whatever the lake size
-        val rows = scala.collection.mutable.Map
-          .empty[Int, scala.collection.mutable.Map[Int, String]]
-        it.foreach { case (_, _, r, c, v) =>
-          rows.getOrElseUpdate(r, scala.collection.mutable.Map.empty) += c -> v
-        }
-        val flow = if (book.contains("F8")) "import" else "export"
-        val year = sheet.toLong
-        // first row containing 'Enero' (etl.py iterrows is row order)
-        val headIdx = rows.keys.toSeq.sorted
-          .find(r => rows(r).values.exists(_.trim == "Enero"))
-        headIdx.iterator.flatMap { h =>
-          val header = rows(h)
-          val colsInOrder = header.keys.toSeq.sorted
-          // month columns in column order (etl.py:36 header.items())
-          val colMeses = colsInOrder
-            .filter(c => mesSet(header(c).trim))
-          val colTotal = colsInOrder.find(c => header(c) == "Total")
-          val totIdx = rows.keys.toSeq.sorted
-            .find(r => rows(r).values.exists(_.contains("Total general")))
-          totIdx.iterator.flatMap { t =>
-            val totRow = rows(t)
-            val monthVals = colMeses.map(c =>
-              (header(c).trim, totRow.get(c).flatMap(tryDouble)))
-            // pandas' masked sequential sum: NaN slots add +0.0, the
-            // fold is strictly left-to-right in column order (float
-            // addition is order-sensitive; this order is pinned
-            // byte-exact against the reference's committed output)
-            var sum = 0.0
-            monthVals.foreach { case (_, v) => sum += v.getOrElse(0.0) }
-            val months = monthVals.iterator.map { case (m, v) =>
-              (year, m, flow, v, None: Option[Double])
-            }
-            val total = colTotal.iterator.map(c =>
-              (year, "Total", flow, totRow.get(c).flatMap(tryDouble),
-                Some(sum): Option[Double]))
-            months ++ total
+    perYearSheet(grid) { (book, sheet, rows) =>
+      val flow = if (book.contains("F8")) "import" else "export"
+      val year = sheet.toLong
+      // first row containing 'Enero' (etl.py iterrows is row order)
+      val headIdx = rows.keys.toSeq.sorted
+        .find(r => rows(r).values.exists(_.trim == "Enero"))
+      headIdx.iterator.flatMap { h =>
+        val header = rows(h)
+        val colsInOrder = header.keys.toSeq.sorted
+        // month columns in column order (etl.py:36 header.items())
+        val colMeses = colsInOrder
+          .filter(c => mesSet(header(c).trim))
+        val colTotal = colsInOrder.find(c => header(c) == "Total")
+        val totIdx = rows.keys.toSeq.sorted
+          .find(r => rows(r).values.exists(_.contains("Total general")))
+        totIdx.iterator.flatMap { t =>
+          val totRow = rows(t)
+          val monthVals = colMeses.map(c =>
+            (header(c).trim, totRow.get(c).flatMap(tryDouble)))
+          // pandas' masked sequential sum: NaN slots add +0.0, the
+          // fold is strictly left-to-right in column order (float
+          // addition is order-sensitive; this order is pinned
+          // byte-exact against the reference's committed output)
+          var sum = 0.0
+          monthVals.foreach { case (_, v) => sum += v.getOrElse(0.0) }
+          val months = monthVals.iterator.map { case (m, v) =>
+            (year, m, flow, v, None: Option[Double])
           }
+          val total = colTotal.iterator.map(c =>
+            (year, "Total", flow, totRow.get(c).flatMap(tryDouble),
+              Some(sum): Option[Double]))
+          months ++ total
         }
       }
+    }
       .toDF("year", "month", "flow", "usd", "sum_months")
   }
 

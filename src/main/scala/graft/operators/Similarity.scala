@@ -877,35 +877,36 @@ object Similarity {
     */
   private[graft] def pagerankIterPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def nodes = Tables(spark, dir).embeddings.select($"vec_id".as("id"))
-    def edges = knnEdges(spark, dir)
-      .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-    val n = measuredCount(spark, dir, "nodes")(nodes)
-    val parts = graphParts(spark, dir)
-    val nodesP = graft.Artifacts(spark, dir, "Similarity.prepNodes")(prepNodes(nodes, parts))
-    val edgesW = graft.Artifacts(spark, dir, "Similarity.prepEdges")(prepEdges(edges, parts))
+    val (n, nodesP, edgesW) = corpusGraph(spark, dir)
     val rank0 = nodesP.select($"id", lit(prScale / n).as("r"))
     pagerankUpdate(nodesP, edgesW, rank0,
       ((prScale / prDampDen) * prBaseNum) / n)
   }
 
-  /** The prepared graph frames per (session, corpus) are index-build
-    * artifacts like lshIndex/ivfCentroids, kept in graft.Artifacts
-    * (which Artifacts.clear empties, so PlanSpec still asserts the
-    * full derivation) so steady-state reruns skip the materialization
+  /** The corpus kNN graph prepared for pagerank: its measured node
+    * count and the [[prepNodes]] / [[prepEdges]] frames — the same
+    * builders [[pagerankRanks]] (the spec path) runs. The prepared
+    * frames per (session, corpus) are index-build artifacts like
+    * lshIndex/ivfCentroids, kept in graft.Artifacts (which
+    * Artifacts.clear empties, so PlanSpec still asserts the full
+    * derivation) so steady-state reruns skip the materialization
     * jobs.
     */
-  private def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
+  private def corpusGraph(spark: SparkSession, dir: String): (Long, DataFrame, DataFrame) = {
     import spark.implicits._
     def nodes = Tables(spark, dir).embeddings.select($"vec_id".as("id"))
     def edges = knnEdges(spark, dir)
       .select($"vec_id".as("src"), $"neighbor_id".as("dst"))
-    // the same builders pagerankRanks (the spec path) runs — one
-    // source of truth for the derivation, cached per corpus here
     val n = measuredCount(spark, dir, "nodes")(nodes)
     val parts = graphParts(spark, dir)
     val nodesP = graft.Artifacts(spark, dir, "Similarity.prepNodes")(prepNodes(nodes, parts))
     val edgesW = graft.Artifacts(spark, dir, "Similarity.prepEdges")(prepEdges(edges, parts))
+    (n, nodesP, edgesW)
+  }
+
+  private def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val (n, nodesP, edgesW) = corpusGraph(spark, dir)
     pagerankIter(nodesP, edgesW, n)
       .select($"id".as("vec_id"), $"r".as("pr"))
       .resultOrder($"vec_id")
@@ -1208,7 +1209,14 @@ object Similarity {
       .resultOrder($"q_id", $"rk")
   }
 
-  private val annPqSql = {
+  /** The CTE prefix both PQ oracle twins share: the global
+    * quantization scale (g), the quantized vectors (qt), the seed
+    * codebook (sq), every vector's per-subspace distance to every
+    * seed (dists), the nearest-seed codes (codes) and the probe
+    * queries' ADC tables (dtab). Ends with the comma before the
+    * twin's own CTEs.
+    */
+  private val pqPrefixSql = {
     val amax =
       "list_reduce(list_prepend(0.0, [abs(CAST(x AS DOUBLE)) for x in embedding]), (a, x) -> greatest(a, x))"
     def sum16(m: Int) = (1 to pqSubDim).map { i =>
@@ -1233,7 +1241,11 @@ object Similarity {
        |  FROM dists GROUP BY vec_id, m),
        |dtab AS (SELECT vec_id AS q_id, m, idx AS c, d FROM dists
        |         WHERE vec_id % ${probeStrideSql} = 0),
-       |scored AS (
+       |""".stripMargin
+  }
+
+  private val annPqSql = pqPrefixSql +
+    """scored AS (
        |  SELECT dt.q_id, c.vec_id, CAST(SUM(dt.d) AS BIGINT) AS adc_dist
        |  FROM codes c JOIN dtab dt ON dt.m = c.m AND dt.c = c.code
        |  WHERE dt.q_id <> c.vec_id
@@ -1244,7 +1256,6 @@ object Similarity {
        |  FROM scored)
        |WHERE rk <= 5
        |ORDER BY q_id, rk""".stripMargin
-  }
 
   // ---- ann_ivfpq: IVF probe pruning composed with PQ ADC scoring ----
   // The production compressed-search plan (IVF-PQ — Jégou et al.,
@@ -1290,35 +1301,8 @@ object Similarity {
       .resultOrder($"q_id", $"rk")
   }
 
-  private def annIvfPq(spark: SparkSession, dir: String): DataFrame =
-    annIvfPqPlan(spark, dir)
-
-  private val annIvfPqSql = {
-    val amax =
-      "list_reduce(list_prepend(0.0, [abs(CAST(x AS DOUBLE)) for x in embedding]), (a, x) -> greatest(a, x))"
-    def sum16(m: Int) = (1 to pqSubDim).map { i =>
-      val p = m * pqSubDim + i
-      s"(CAST(v.q[$p] AS BIGINT) - CAST(s.sq[$p] AS BIGINT)) * (CAST(v.q[$p] AS BIGINT) - CAST(s.sq[$p] AS BIGINT))"
-    }.mkString(" + ")
-    val distArms = (0 until pqSubspaces).map(m =>
-      s"SELECT v.vec_id, s.idx, $m AS m, ${sum16(m)} AS d FROM qt v, sq s")
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH g AS (
-       |  SELECT greatest(MAX($amax), 1e-30) / 127.0 AS gscale FROM embeddings),
-       |qt AS (
-       |  SELECT vec_id,
-       |    [CAST(trunc(CAST(x AS DOUBLE) / g.gscale) AS INTEGER) for x in embedding] AS q
-       |  FROM embeddings, g),
-       |sq AS (SELECT CAST(vec_id // $pqSeedMod AS INTEGER) AS idx, q AS sq FROM qt
-       |       WHERE vec_id % $pqSeedMod = 0 AND vec_id < $pqSeedMax),
-       |dists AS (
-       |  $distArms),
-       |codes AS (
-       |  SELECT vec_id, m, CAST(MIN(d * $pqK + idx) % $pqK AS INTEGER) AS code
-       |  FROM dists GROUP BY vec_id, m),
-       |dtab AS (SELECT vec_id AS q_id, m, idx AS c, d FROM dists
-       |         WHERE vec_id % ${probeStrideSql} = 0),
-       |fv AS (
+  private val annIvfPqSql = pqPrefixSql +
+    s"""fv AS (
        |  SELECT vec_id, label, embedding AS e, ${normSql("embedding")} AS nrm
        |  FROM embeddings),
        |dims AS (
@@ -1351,7 +1335,6 @@ object Similarity {
        |  FROM scored)
        |WHERE rk <= 5
        |ORDER BY q_id, rk""".stripMargin
-  }
 
   // ---- ann_recall_eval: recall@k of the LSH index vs ground truth ----
   // The evaluation harness every ANN deployment runs before trusting
@@ -1402,7 +1385,7 @@ object Similarity {
     Q("ann_recall_eval", annRecallEval, Some(annRecallEvalSql)),
     Q("ann_bruteforce", annBrute, Some(annBruteSql)),
     Q("ann_pq", annPq, Some(annPqSql)),
-    Q("ann_ivfpq", annIvfPq, Some(annIvfPqSql)),
+    Q("ann_ivfpq", annIvfPqPlan, Some(annIvfPqSql)),
     Q("ann_lsh", annLsh, Some(annLshSql)),
     Q("ann_index_stats", annIndexStats, Some(annIndexStatsSql)),
     Q("ann_ivf", annIvf, Some(annIvfSqlProbe(1))),

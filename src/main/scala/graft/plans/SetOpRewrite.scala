@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.Max
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.{EXCEPT, INTERSECT, LEFT_SEMI_OR_ANTI_JOIN}
 
 /** Optimizer rule: INTERSECT / EXCEPT whose two arms filter the SAME
   * source collapse to ONE scan + a membership-flag aggregation.
@@ -31,9 +32,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * canonicalized source, positionally identical projections,
   * deterministic conditions, the positional null-safe join condition
   * — and rewrites Distinct-form and Aggregate-form (after
-  * ReplaceDistinctWithAggregate) alike. Registered by
-  * [[graft.GraftExtensions]] via injectOptimizerRule (config path)
-  * and experimental.extraOptimizations (live install path).
+  * ReplaceDistinctWithAggregate) alike. [[graft.GraftExtensions]]
+  * injects it into the operator-optimization batches of every
+  * session, local or cluster; `spark.sql.optimizer.excludedRules`
+  * turns it off by its `ruleName`.
   */
 object SetOpToFlagAggregate extends Rule[LogicalPlan] {
 
@@ -97,7 +99,11 @@ object SetOpToFlagAggregate extends Rule[LogicalPlan] {
     Project(le.map(_.toAttribute), Filter(keep, agg))
   }
 
-  def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+  // the rule runs in every iteration of the operator-optimization
+  // batches, so it skips subtrees holding no set op and no
+  // semi/anti join, the only shapes it rewrites
+  def apply(plan: LogicalPlan): LogicalPlan = plan.transformWithPruning(
+      _.containsAnyPattern(INTERSECT, EXCEPT, LEFT_SEMI_OR_ANTI_JOIN)) {
     // pre-lowering shapes (when the rule runs before Replace Operators)
     case op @ Intersect(l, r, false) => rewrite(l, r, anti = false).getOrElse(op)
     case op @ Except(l, r, false) => rewrite(l, r, anti = true).getOrElse(op)

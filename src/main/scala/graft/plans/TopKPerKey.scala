@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -161,19 +161,6 @@ object TopKPerKeyExec {
 /** Plans TopKPerKey as partial → (shuffle to clustered) → final. */
 object TopKStrategy extends SparkStrategy {
 
-  /** Idempotent registration on a live session — the ONE copy of the
-    * synchronized check-then-append (shared by GraftExtensions.install
-    * and TopKPerKey.apply so the discipline can't drift between
-    * sites).
-    */
-  def installOn(spark: SparkSession): Unit =
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ TopKStrategy
-      }
-    }
-
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKey(keys, order, k, child) =>
       // fail fast with the conf NAME on a mis-tuned value: a cap <= 0
@@ -203,14 +190,14 @@ object TopKPerKey {
   def asc(name: String): Sort = Sort(name)
   def desc(name: String): Sort = Sort(name, descending = true)
 
-  /** API: group-wise top-k. Registers the strategy on first use
-    * (idempotent) and builds the DataFrame over the logical node.
+  /** API: group-wise top-k: the DataFrame over the logical node,
+    * which [[TopKStrategy]] (part of every [[graft.GraftExtensions]]
+    * session) plans.
     */
   def apply(df: DataFrame, keyCols: Seq[String], order: Seq[Sort],
       k: Int): DataFrame = {
     require(k > 0, s"top-k needs k > 0, got $k")
     val spark = df.sparkSession
-    TopKStrategy.installOn(spark)
     val plan = df.queryExecution.analyzed
     def attr(n: String): Attribute = plan.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(

@@ -78,6 +78,19 @@ class BenchSpec extends AnyFunSuite {
     assert(r.json.contains(s""","runtime_filters":0,"""), r.json)
   }
 
+  test("the warm-up record counts the jobs of its eager artifact builds") {
+    // cold, graph_pagerank checkpoints its prepared graph and every
+    // rank iteration while its plan is built; the measured pass hits
+    // the store
+    Artifacts.clear()
+    val r = Bench.measure(spark, sf,
+      Seq("graph_pagerank" -> SparkEntry.queries("graph_pagerank")), nPasses = 1).records.head
+    assert(r.minS > 0 && r.builds > 0 && r.rebuilds == 0, r)
+    assert(r.firstJobs > r.jobs && r.firstStages >= r.stages && r.firstTasks >= r.tasks, r)
+    assert(r.json.contains(s""","tasks":${r.tasks},"first_jobs":${r.firstJobs},""" +
+      s""""first_stages":${r.firstStages},"first_tasks":${r.firstTasks},"exchanges":"""), r.json)
+  }
+
   test("the warm-up record counts the janino compiles of its run") {
     // generated classes are cached JVM-wide by source text, and earlier
     // suites may have compiled this query's plan already: a literal no

@@ -1,15 +1,17 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.{SetOpToFlagAggregate, TopKStrategy}
 
-/** Registration surface: custom expressions usable from SQL and the
-  * planner strategy installed.
+/** Registration surface: every session built by [[GraftSession]]
+  * carries [[GraftExtensions]] — custom expressions usable from SQL,
+  * the planner strategy and the optimizer rule.
   */
 class ExtensionsSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("install exposes the native expressions to SQL") {
-    GraftExtensions.install(spark)
+  test("the session exposes the native expressions to SQL") {
     val r = spark.sql(
       "SELECT rolling_hash('abc') AS h, " +
         "dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
@@ -24,29 +26,43 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(b.getLong(1) == (97L - 128L) * (97L - 128L) + (98L - 128L) * (98L - 128L))
   }
 
-  test("install registers the TopKPerKey strategy") {
-    GraftExtensions.install(spark)
-    assert(spark.experimental.extraStrategies
-      .exists(_.getClass.getName.contains("TopKStrategy")))
-    // idempotent
-    GraftExtensions.install(spark)
-    assert(spark.experimental.extraStrategies
-      .count(_.getClass.getName.contains("TopKStrategy")) == 1)
-    assert(spark.experimental.extraOptimizations
-      .count(_.getClass.getName.contains("SetOpToFlagAggregate")) == 1)
+  test("the session plans with the TopKPerKey strategy and the set-op rule") {
+    assert(spark.sessionState.planner.strategies.contains(TopKStrategy))
+    assert(spark.sessionState.optimizer.batches
+      .exists(_.rules.contains(SetOpToFlagAggregate)))
+  }
+
+  test("a newSession() session resolves every function and rewrites set ops") {
+    val s2 = spark.newSession()
+    // one call per registered name, so a new function must add its own
+    val calls = Map(
+      "rolling_hash" -> "rolling_hash('abc')",
+      "dot_product" -> "dot_product(array(1.0d), array(2.0d))",
+      "sum_squares" -> "sum_squares(array(3.0d))",
+      "byte_sum" -> "byte_sum('ab')",
+      "byte_energy" -> "byte_energy('ab')",
+      "term_counts" -> "term_counts(array('a', 'b', 'a'))",
+      "canonical_text" -> "canonical_text(' A,b ')",
+      "canonical_url" -> "canonical_url('https://www.X.com/a/')")
+    assert(calls.keySet == GraftExtensions.functions.map(_._1).toSet)
+    for ((name, call) <- calls)
+      assert(s2.sql(s"SELECT $call AS v").collect().length == 1, name)
+    val t = Tables(s2, sf)
+    val opt = t.orders.filter(col("o_orderpriority") === "1-URGENT").select(col("o_custkey"))
+      .intersect(t.orders.filter(col("o_orderpriority") === "5-LOW").select(col("o_custkey")))
+      .queryExecution.optimizedPlan.toString
+    assert(opt.contains("__setop_l") && !opt.contains("Join"), opt)
   }
 
   // ---- SetOpToFlagAggregate ----
 
+  // the builder does not set this key, so unset restores the session
   private def withRuleOff[T](body: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_.getClass.getName.contains("SetOpToFlagAggregate"))
-    try body finally spark.experimental.extraOptimizations = saved
+    spark.conf.set("spark.sql.optimizer.excludedRules", SetOpToFlagAggregate.ruleName)
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   test("same-source INTERSECT rewrites to one scan + flag aggregate") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     val t = Tables(spark, sf)
     val urgent = t.orders.filter($"o_orderpriority" === "1-URGENT").select($"o_custkey")
@@ -66,7 +82,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("same-source EXCEPT agrees with the built-in plan, nulls included") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     // nulls group null-safe in set ops: NULL ∈ both sides must drop
     // out of EXCEPT and survive INTERSECT exactly like the built-in
@@ -90,7 +105,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("different-source set ops are left to the built-in lowering") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     val t = Tables(spark, sf)
     val a = t.orders.filter($"o_orderpriority" === "1-URGENT").select($"o_custkey")

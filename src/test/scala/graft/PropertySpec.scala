@@ -348,7 +348,6 @@ class PropertySpec extends AnyFunSuite {
     // equivalence against a Scala set model (and implicitly against
     // the built-in lowering, which the model also describes), nulls
     // included, both set ops, varying filter selectivity
-    GraftExtensions.install(spark)
     val row = for {
       k <- Gen.frequency(8 -> Gen.choose(0L, 6L).map(Option(_)),
         2 -> Gen.const(Option.empty[Long]))

@@ -77,10 +77,10 @@ class TopKPerKeySpec extends AnyFunSuite {
 
   test("a newSession() session plans TopKPerKey with the strategy's operator") {
     // planner strategies are session state: a session made by
-    // newSession() starts without TopKStrategy, so TopKPerKey.apply's
-    // own install is the one that plans it there
+    // newSession() gets TopKStrategy from the session's extensions,
+    // before any TopKPerKey call, and TopKPerKey.apply adds nothing
     val s2 = spark.newSession()
-    assert(!s2.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
+    assert(s2.sessionState.planner.strategies.contains(graft.plans.TopKStrategy))
     val rows = s2.range(0, 40, 1, 4).toDF("v").withColumn("key", col("v") % 3)
     val df = TopKPerKey(rows, Seq("key"), Seq(TopKPerKey.desc("v")), 2)
     val execs = df.queryExecution.executedPlan.collect {
@@ -88,6 +88,7 @@ class TopKPerKeySpec extends AnyFunSuite {
     }
     assert(execs.size == 2, df.queryExecution.executedPlan)
     assert(df.collect().map(_.getLong(0)).sorted.toSeq == (34L to 39L))
+    assert(s2.experimental.extraStrategies.isEmpty)
   }
 
   test("handles groups smaller than k and k=1") {
